@@ -72,8 +72,7 @@ object Bench {
 
     // Per-stage executor run/CPU accumulation. Stage-completed events
     // arrive asynchronously on the listener bus; each timed run snapshots
-    // the counters after a short settle window (same approach as the
-    // committed Q52Profile harness this listener is lifted from).
+    // the counters after a short settle window.
     val runMs = new java.util.concurrent.atomic.AtomicLong(0L)
     val cpuMs = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -90,7 +89,7 @@ object Bench {
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
 
-    // Per-rep environment stamps (Q52Profile's fields, generalized — round-11
+    // Per-rep environment stamps (round-11
     // verdict item 1): the q125/q123/q124 driver-record cluster read 2–6×
     // every builder record with wall≫task, the same shape q52 had before its
     // r10 root-cause. A rep that carries its own JIT-compile delta, GC delta,

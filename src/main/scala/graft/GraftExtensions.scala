@@ -1,83 +1,51 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CdcBoundaries, CmsSketch, DotProduct, H60Array, HllSketch, Int8QuantStats, LangScores, MinhashSig, NfcNormalize, NgramShingles, PolyFingerprint, SimHashBits, SortedMultiConcat, WinnowFingerprints}
+import graft.functions._
 
-/** SparkSessionExtensions entry point: registers the engine's native
-  * expressions for sessions built with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.GraftExtensions`.
+/** The engine's one native-function catalog. Every codegen'd expression
+  * is one row of [[GraftExtensions.functions]]: SQL name, expression
+  * class, argument builder.
   *
-  * (Queries that receive an already-built session — the driver contract —
-  * use the per-session `NgramShingles.register` instead; both paths bind
-  * the same builder.)
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier(NgramShingles.fnName),
-      new ExpressionInfo(classOf[NgramShingles].getName, NgramShingles.fnName),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(tokens) => NgramShingles(tokens, 3)
-        case Seq(tokens, Literal(n: Int, IntegerType)) => NgramShingles(tokens, n)
-        case other => throw new IllegalArgumentException(
-          s"${NgramShingles.fnName} expects (array<string>[, n]); got ${other.size} args")
-      }))
-    e.injectFunction((
-      FunctionIdentifier(DotProduct.fnName),
-      new ExpressionInfo(classOf[DotProduct].getName, DotProduct.fnName),
-      DotProduct.builder _))
-    e.injectFunction((
-      FunctionIdentifier(SimHashBits.fnName),
-      new ExpressionInfo(classOf[SimHashBits].getName, SimHashBits.fnName),
-      SimHashBits.builder _))
-    e.injectFunction((
-      FunctionIdentifier(HllSketch.fnName),
-      new ExpressionInfo(classOf[HllSketch].getName, HllSketch.fnName),
-      HllSketch.builder _))
-    e.injectFunction((
-      FunctionIdentifier(PolyFingerprint.fnName),
-      new ExpressionInfo(classOf[PolyFingerprint].getName, PolyFingerprint.fnName),
-      PolyFingerprint.builder _))
-    e.injectFunction((
-      FunctionIdentifier(Int8QuantStats.fnName),
-      new ExpressionInfo(classOf[Int8QuantStats].getName, Int8QuantStats.fnName),
-      Int8QuantStats.builder _))
-    e.injectFunction((
-      FunctionIdentifier(LangScores.fnName),
-      new ExpressionInfo(classOf[LangScores].getName, LangScores.fnName),
-      LangScores.builder _))
-    e.injectFunction((
-      FunctionIdentifier(CdcBoundaries.fnName),
-      new ExpressionInfo(classOf[CdcBoundaries].getName, CdcBoundaries.fnName),
-      CdcBoundaries.builder _))
-    e.injectFunction((
-      FunctionIdentifier(WinnowFingerprints.fnName),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName, WinnowFingerprints.fnName),
-      WinnowFingerprints.builder _))
-    e.injectFunction((
-      FunctionIdentifier(CmsSketch.fnName),
-      new ExpressionInfo(classOf[CmsSketch].getName, CmsSketch.fnName),
-      CmsSketch.builder _))
-    e.injectFunction((
-      FunctionIdentifier(H60Array.fnName),
-      new ExpressionInfo(classOf[H60Array].getName, H60Array.fnName),
-      H60Array.builder _))
-    e.injectFunction((
-      FunctionIdentifier(SortedMultiConcat.fnName),
-      new ExpressionInfo(classOf[SortedMultiConcat].getName, SortedMultiConcat.fnName),
-      SortedMultiConcat.builder _))
-    e.injectFunction((
-      FunctionIdentifier(MinhashSig.fnName),
-      new ExpressionInfo(classOf[MinhashSig].getName, MinhashSig.fnName),
-      MinhashSig.builder _))
-    e.injectFunction((
-      FunctionIdentifier(NfcNormalize.fnName),
-      new ExpressionInfo(classOf[NfcNormalize].getName, NfcNormalize.fnName),
-      NfcNormalize.builder _))
-  }
+  * The class is listed in
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * so Spark's `ServiceLoader` applies it to every session that
+  * `SparkSession.builder().getOrCreate()` builds: SQL, `expr(...)` and
+  * `selectExpr` resolve all rows with no per-session call.
+  * `--conf spark.sql.extensions=graft.GraftExtensions` names the same
+  * class and injects the same table. */
+class GraftExtensions extends SparkSessionExtensionsProvider {
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      e.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
+}
+
+object GraftExtensions {
+  val functions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    (CdcBoundaries.fnName, classOf[CdcBoundaries], CdcBoundaries.builder),
+    (CmsSketch.fnName, classOf[CmsSketch], CmsSketch.builder),
+    (DotProduct.fnName, classOf[DotProduct], DotProduct.builder),
+    (EncodingStats.fnName, classOf[EncodingStats], EncodingStats.builder),
+    (H60Array.fnName, classOf[H60Array], H60Array.builder),
+    (H60Hash.fnName, classOf[H60Hash], H60Hash.builder),
+    (HllSketch.fnName, classOf[HllSketch], HllSketch.builder),
+    (Int8QuantStats.fnName, classOf[Int8QuantStats], Int8QuantStats.builder),
+    (JlProject.fnName, classOf[JlProject], JlProject.builder),
+    (L2SqLong.fnName, classOf[L2SqLong], L2SqLong.builder),
+    (LangScores.fnName, classOf[LangScores], LangScores.builder),
+    (MetsFold.fnName, classOf[MetsFold], MetsFold.builder),
+    (MinhashSig.fnName, classOf[MinhashSig], MinhashSig.builder),
+    (NfcNormalize.fnName, classOf[NfcNormalize], NfcNormalize.builder),
+    (NgramShingles.fnName, classOf[NgramShingles], NgramShingles.builder),
+    (PolyFingerprint.fnName, classOf[PolyFingerprint], PolyFingerprint.builder),
+    (SimHashBits.fnName, classOf[SimHashBits], SimHashBits.builder),
+    (SortedMultiConcat.fnName, classOf[SortedMultiConcat], SortedMultiConcat.builder),
+    (SubstrCensus.fnName, classOf[SubstrCensus], SubstrCensus.builder),
+    (WinnowFingerprints.fnName, classOf[WinnowFingerprints], WinnowFingerprints.builder),
+  )
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -84,8 +82,6 @@ object CdcBoundaries {
     new GenericArrayData(out.toArray)
   }
 
-  private val info = new ExpressionInfo(classOf[CdcBoundaries].getName, fnName)
-
   private[graft] def builder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(tk, Literal(w: Int, IntegerType), Literal(d, LongType)) =>
       CdcBoundaries(tk, w, d.asInstanceOf[Long])
@@ -94,9 +90,4 @@ object CdcBoundaries {
     case other => throw new IllegalArgumentException(
       s"$fnName expects (array<string>, int literal, long literal); got $other")
   }
-
-  /** Register `cdc_boundaries` in this session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }

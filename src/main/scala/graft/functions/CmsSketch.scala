@@ -2,11 +2,9 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -164,17 +162,10 @@ object CmsSketch {
       s"list_extract($cms, $d * $W + (${Scalars.h60SeededSql(d.toString, t)}) % $W + 1)"
     }.mkString("least(", ", ", ")")
 
-  private val info = new ExpressionInfo(classOf[CmsSketch].getName, fnName)
-
   private[graft] def builder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(c) => CmsSketch(c)
     case Seq(c, w) => CmsSketch(c, w)
     case other => throw new IllegalArgumentException(
       s"$fnName expects (string[, weight]); got ${other.size} args")
   }
-
-  /** Register `cms_sketch` in this session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }

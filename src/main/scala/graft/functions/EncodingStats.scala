@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -94,16 +93,9 @@ object EncodingStats {
     new GenericInternalRow(Array[Any](n, repl, ctrl, moji, nonAscii, digits, spaces))
   }
 
-  private val info = new ExpressionInfo(classOf[EncodingStats].getName, fnName)
-
   private[graft] def builder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(s) => EncodingStats(s)
     case other => throw new IllegalArgumentException(
       s"$fnName expects (string); got ${other.size} args")
   }
-
-  /** Register `encoding_stats` in this session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -275,16 +273,9 @@ object LangScores {
     new GenericArrayData(counts)
   }
 
-  private val info = new ExpressionInfo(classOf[LangScores].getName, fnName)
-
   private[graft] def builder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(tk) => LangScores(tk)
     case other => throw new IllegalArgumentException(
       s"$fnName expects (array<string>); got ${other.size} args")
   }
-
-  /** Register `lang_scores` in this session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -95,19 +93,10 @@ object NgramShingles {
 
   val fnName = "ngram_shingles"
 
-  private val info = new ExpressionInfo(
-    classOf[NgramShingles].getName, fnName)
-
-  private def builder(exprs: Seq[Expression]): Expression = exprs match {
+  private[graft] def builder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(tokens) => NgramShingles(tokens, 3)
     case Seq(tokens, Literal(n: Int, IntegerType)) => NgramShingles(tokens, n)
     case other => throw new IllegalArgumentException(
       s"$fnName expects (array<string>[, n]); got ${other.size} args")
   }
-
-  /** Register `ngram_shingles` in this session's function registry so it
-    * is usable from `expr(...)`/SQL. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }

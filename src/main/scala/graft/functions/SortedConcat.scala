@@ -4,11 +4,9 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -194,15 +192,8 @@ object SortedMultiConcat {
 
   val fnName = "sorted_multi_concat"
 
-  private val info = new ExpressionInfo(classOf[SortedMultiConcat].getName, fnName)
-
   private[graft] def builder(exprs: Seq[Expression]): Expression = {
     require(exprs.nonEmpty, s"$fnName expects at least the sort-key argument")
     SortedMultiConcat(exprs)
   }
-
-  /** Register `sorted_multi_concat` in this session's registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -105,8 +103,6 @@ object SubstrCensus {
     total
   }
 
-  private val info = new ExpressionInfo(classOf[SubstrCensus].getName, fnName)
-
   private[graft] def builder(exprs: Seq[Expression]): Expression = exprs match {
     case src +: rest if rest.nonEmpty =>
       val pats = rest.map {
@@ -118,9 +114,4 @@ object SubstrCensus {
     case other => throw new IllegalArgumentException(
       s"$fnName expects (string, 'p1' [, 'p2' …]); got ${other.size} args")
   }
-
-  /** Register `substr_census` in this session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }

@@ -2,8 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -98,18 +96,11 @@ object PolyFingerprint {
     java.lang.Long.valueOf(acc)
   }
 
-  private val info = new ExpressionInfo(classOf[PolyFingerprint].getName, fnName)
-
   private[graft] def builder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(tk) => PolyFingerprint(tk)
     case other => throw new IllegalArgumentException(
       s"$fnName expects (array<string>); got ${other.size} args")
   }
-
-  /** Register `poly_fingerprint` in this session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }
 
 /** `h60(s)`: the engine's universal 60-bit md5 hash as ONE native
@@ -200,35 +191,21 @@ object H60Array {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  private val info = new ExpressionInfo(classOf[H60Array].getName, fnName)
-
   private[graft] def builder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(s) => H60Array(s)
     case other => throw new IllegalArgumentException(
       s"$fnName expects (array<string>); got ${other.size} args")
   }
-
-  /** Register `h60_array` in this session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }
 
 object H60Hash {
   val fnName = "h60"
-
-  private val info = new ExpressionInfo(classOf[H60Hash].getName, fnName)
 
   private[graft] def builder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(s) => H60Hash(s)
     case other => throw new IllegalArgumentException(
       s"$fnName expects (string); got ${other.size} args")
   }
-
-  /** Register `h60` in this session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }
 
 /** `nfc_normalize(s)`: Unicode NFC normalization — the ftfy-class
@@ -284,18 +261,11 @@ object NfcNormalize {
       s.toString, java.text.Normalizer.Form.NFC))
   }
 
-  private val info = new ExpressionInfo(classOf[NfcNormalize].getName, fnName)
-
   private[graft] def builder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(s) => NfcNormalize(s)
     case other => throw new IllegalArgumentException(
       s"$fnName expects (string); got ${other.size} args")
   }
-
-  /** Register `nfc_normalize` in this session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }
 
 /** `minhash_sig(sh, k)`: the k-hash MinHash signature of a shingle
@@ -382,16 +352,9 @@ object MinhashSig {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  private val info = new ExpressionInfo(classOf[MinhashSig].getName, fnName)
-
   private[graft] def builder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(s, Literal(k: Int, IntegerType)) => MinhashSig(s, k)
     case other => throw new IllegalArgumentException(
       s"$fnName expects (array<string>, int literal); got ${other.size} args")
   }
-
-  /** Register `minhash_sig` in this session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -106,18 +104,11 @@ case class DotProduct(left: Expression, right: Expression)
 object DotProduct {
   val fnName = "dot_product"
 
-  private val info = new ExpressionInfo(classOf[DotProduct].getName, fnName)
-
   private[graft] def builder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(a, b) => DotProduct(a, b)
     case other => throw new IllegalArgumentException(
       s"$fnName expects (array, array); got ${other.size} args")
   }
-
-  /** Register `dot_product` in this session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }
 
 /** `simhash_bits(hs[, nBits])`: SimHash of a pre-hashed token array.
@@ -337,18 +328,11 @@ case class Int8QuantStats(child: Expression) extends UnaryExpression {
 object Int8QuantStats {
   val fnName = "int8_quant"
 
-  private val info = new ExpressionInfo(classOf[Int8QuantStats].getName, fnName)
-
   private[graft] def builder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(v) => Int8QuantStats(v)
     case other => throw new IllegalArgumentException(
       s"$fnName expects (array<float|double>); got ${other.size} args")
   }
-
-  /** Register `int8_quant` in this session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }
 
 /** `l2_sq(a, b)`: exact squared L2 distance of two equal-length
@@ -427,18 +411,11 @@ case class L2SqLong(left: Expression, right: Expression)
 object L2SqLong {
   val fnName = "l2_sq"
 
-  private val info = new ExpressionInfo(classOf[L2SqLong].getName, fnName)
-
   private[graft] def builder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(a, b) => L2SqLong(a, b)
     case other => throw new IllegalArgumentException(
       s"$fnName expects (array<bigint>, array<bigint>); got ${other.size} args")
   }
-
-  /** Register `l2_sq` in this session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }
 
 /** `jl_project(mvec, dim, outDim)`: Johnson–Lindenstrauss ±1 sign
@@ -544,8 +521,6 @@ case class JlProject(child: Expression, dim: Int, outDim: Int)
 object JlProject {
   val fnName = "jl_project"
 
-  private val info = new ExpressionInfo(classOf[JlProject].getName, fnName)
-
   private def foldedInt(e: Expression, what: String): Int = {
     require(e.foldable && (e.dataType match {
       case ByteType | ShortType | IntegerType | LongType => true
@@ -565,17 +540,10 @@ object JlProject {
     case other => throw new IllegalArgumentException(
       s"$fnName expects (array<bigint>, dim, outDim); got ${other.size} args")
   }
-
-  /** Register `jl_project` in this session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }
 
 object SimHashBits {
   val fnName = "simhash_bits"
-
-  private val info = new ExpressionInfo(classOf[SimHashBits].getName, fnName)
 
   private[graft] def builder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(hs) => SimHashBits(hs, 32)
@@ -602,9 +570,4 @@ object SimHashBits {
     case other => throw new IllegalArgumentException(
       s"$fnName expects (array<bigint>[, nBits]); got ${other.size} args")
   }
-
-  /** Register `simhash_bits` in this session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }

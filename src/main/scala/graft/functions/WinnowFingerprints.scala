@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -109,17 +107,10 @@ object WinnowFingerprints {
     new GenericArrayData(out.toArray)
   }
 
-  private val info = new ExpressionInfo(classOf[WinnowFingerprints].getName, fnName)
-
   private[graft] def builder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(tk, Literal(k: Int, IntegerType), Literal(w: Int, IntegerType)) =>
       WinnowFingerprints(tk, k, w)
     case other => throw new IllegalArgumentException(
       s"$fnName expects (array<string>, int literal, int literal); got $other")
   }
-
-  /** Register `winnow_fingerprints` in this session's registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
 }

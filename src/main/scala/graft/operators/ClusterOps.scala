@@ -105,7 +105,7 @@ object ClusterOps {
     require(k >= 1 && rounds >= 1)
     require(seedMode == "lowid" || seedMode == "hash",
       s"seedMode must be 'lowid' or 'hash', got '$seedMode'")
-    val vecs = SimOps.register(embeddings)
+    val vecs = embeddings
       .select(col("vec_id"),
         // Spark floor(double) yields LONG; cast back so mvec stays
         // array<double> for dot_product (values are integer-exact)

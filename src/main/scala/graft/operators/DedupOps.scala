@@ -97,7 +97,6 @@ object DedupOps {
     * table — the seam that lets a df-capped shingle source
     * ([[dfCappedShingles]]) feed the whole MinHash/LSH chain. */
   private def minhashSignedPresentFrom(shSets: DataFrame, k: Int): DataFrame = {
-    graft.functions.H60Hash.register(shSets.sparkSession)
     val coefs = minhashCoefficients(k)
     val minCols = coefs.zipWithIndex.map { case ((a, b), j) =>
       min(expr(s"(${a}L * h + ${b}L) % 1000000007L")).as(s"m$j")
@@ -693,7 +692,6 @@ object DedupOps {
     import org.apache.spark.sql.expressions.Window
     require(window >= 1, s"window must be >= 1, got $window")
     require(divisor >= 1L, s"divisor must be >= 1, got $divisor")
-    graft.functions.CdcBoundaries.register(documents.sparkSession)
     val segRows = TextOps.tokenized(documents)
       .withColumn("n", size(col("tk")).cast("long"))
       // native single-pass boundary scan; spec-proven bit-identical to
@@ -755,7 +753,6 @@ object DedupOps {
     * total-order sort the driver contract requires — the q37 shape. */
   def winnowStats(documents: DataFrame, k: Int = 3, w: Int = 4): DataFrame = {
     require(k >= 1 && w >= 1, s"k and w must be >= 1, got k=$k w=$w")
-    graft.functions.WinnowFingerprints.register(documents.sparkSession)
     TextOps.tokenized(documents)
       .withColumn("fp", expr(s"winnow_fingerprints(tk, $k, $w)"))
       .withColumn("n_kgrams",
@@ -798,7 +795,6 @@ object DedupOps {
     require(minShared >= 1L, s"minShared must be >= 1, got $minShared")
     require(maxHashDocFrac > 0.0 && maxHashDocFrac <= 1.0,
       s"maxHashDocFrac must be in (0, 1], got $maxHashDocFrac")
-    graft.functions.WinnowFingerprints.register(documents.sparkSession)
     val fp = TextOps.tokenized(documents)
       .select(col("doc_id"),
         explode(expr(s"winnow_fingerprints(tk, $k, $w)")).as("h"))
@@ -1039,7 +1035,6 @@ object DedupOps {
     // engines cap before hashing, so equality is by construction); only
     // the join keys shrink. h60 collisions merge the same two shingles
     // in both engines (P ≈ 4e-7 at 10⁶ shingles).
-    graft.functions.H60Hash.register(documents.sparkSession)
     val shr = withMeta
       .select(col("doc_id"), col("lang"), col("blk"), explode(col("sh")).as("g0"))
       .select(col("doc_id"), col("lang"), col("blk"), expr("h60(g0)").as("g"))
@@ -1111,7 +1106,6 @@ object DedupOps {
     import org.apache.spark.sql.expressions.Window
     require(tPpm >= 1L && tPpm <= 1000000L,
       s"tPpm must be in [1, 1000000], got $tPpm")
-    graft.functions.H60Array.register(documents.sparkSession)
     // ONE pass: per-doc hashed shingle arrays (round 9). Shingles hash
     // to 60-bit longs at derivation (the q35/q36 discipline) — with raw
     // ~25-byte 3-gram strings every downstream subtree shuffled,
@@ -1268,8 +1262,6 @@ object DedupOps {
   private def hashedWindows(
       documents: DataFrame, w: Int): (DataFrame, DataFrame) = {
     require(w >= 2, s"w must be >= 2, got $w")
-    graft.functions.H60Hash.register(documents.sparkSession)
-    graft.functions.NgramShingles.register(documents.sparkSession)
     val toks = TextOps.tokenized(documents)
       .select(col("doc_id"), size(col("tk")).cast("long").as("n_tokens"), col("tk"))
     val wins = toks
@@ -1328,7 +1320,6 @@ object DedupOps {
     * = the (doc_id, pos) window starts to remove. */
   private def exciseFlagged(toks: DataFrame, flagged: DataFrame,
       w: Int): DataFrame = {
-    graft.functions.SortedMultiConcat.register(toks.sparkSession)
     val cov = flagged
       .select(col("doc_id"), explode(expr(s"sequence(pos, pos + ${w - 1}L)")).as("p"))
       .distinct()
@@ -1407,7 +1398,6 @@ object DedupOps {
       topK: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    graft.functions.H60Hash.register(documents.sparkSession)
     // the verified near-dup pairs are BOUNDED by construction — checkpoint
     // once (consumed by the broadcast join and the b-doc set below)
     val pairs = minhashCandidatePairs(documents)

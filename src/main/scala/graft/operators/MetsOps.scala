@@ -111,7 +111,6 @@ object MetsOps {
     * The wire still carries ~150 B/row of fields instead of ~700 B/row
     * of rendered XML, once. */
   def renderMets(reps: DataFrame): DataFrame = {
-    graft.functions.MetsFold.register(reps.sparkSession)
     val parted = reps.repartitionByRange(col("objid"))
     // per-row codegen'd rendering AFTER the exchange; the grouped levels
     // below only sort, extract, and join pre-built strings. abs_name is
@@ -129,7 +128,7 @@ object MetsOps {
     // contract and MetsFoldSpec the differential proof against the
     // replaced sorted_multi_concat → window → sorted_multi_concat
     // chain). The replaced chain cost ~8.8 of the render stage's ~15
-    // task-seconds at sf0.1 (Scratch q52Stages decomposition): the
+    // task-seconds at sf0.1 (per-stage decomposition of q52): the
     // rep-level ObjectHashAggregate hashed 75k near-singleton groups on
     // SEVEN string key columns and round-tripped every typed buffer
     // through serialize/deserialize between its partial and final modes,

@@ -408,7 +408,7 @@ object RefineOps {
     * by construction, never corpus-scale. */
   def sourceEmbeddingAffinity(documents: DataFrame,
       embeddings: DataFrame): DataFrame = {
-    val v = SimOps.register(embeddings).select(col("vec_id"),
+    val v = embeddings.select(col("vec_id"),
       expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0D + 0.5D) AS DOUBLE))")
         .as("mvec"))
     val cent = documents
@@ -531,7 +531,6 @@ object RefineOps {
     * md5-prefix hash), so results stay bit-exact; the rebuild is a
     * doc-keyed partial agg. */
   def dedupParagraphsAcrossDocs(docLines: DataFrame): DataFrame = {
-    graft.functions.H60Hash.register(docLines.sparkSession)
     // posexplode_OUTER: a zero-line document survives to the output
     // (its null row counts as no line); ONE exploded derivation feeds
     // both the census and the rebuild (the q110 single-subtree lesson).

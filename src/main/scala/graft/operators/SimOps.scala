@@ -28,21 +28,12 @@ object SimOps {
     * to the DuckDB oracle's `list_reduce([0.0] || ..., +)` — but the
     * per-pair cost is a fused codegen loop instead of an interpreted
     * HOF (~15× on the ANN hot paths, the round-1 verdict's top perf
-    * item). Callers must go through an entry point that calls
-    * [[register]] first. */
+    * item). */
   def dotX(a: String, b: String): String = s"dot_product($a, $b)"
-
-  /** Idempotent per-session registration of the native expressions every
-    * SimOps entry point relies on. */
-  def register(df: DataFrame): DataFrame = {
-    graft.functions.DotProduct.register(df.sparkSession)
-    graft.functions.H60Hash.register(df.sparkSession)
-    df
-  }
 
   /** embeddings + `norm` (L2). */
   def withNorm(embeddings: DataFrame): DataFrame =
-    register(embeddings)
+    embeddings
       .withColumn("norm", expr(s"sqrt(${dotX("embedding", "embedding")})"))
 
   /** Brute-force cosine top-k: for each query vector (vec_id < nQueries),
@@ -80,7 +71,7 @@ object SimOps {
     * difference between O(planes) and O(corpus·planes) hash evaluations —
     * at 100 TB the plane table broadcasts to every executor for free. */
   def planeTable(embeddings: DataFrame, nBits: Int, dim: Int): DataFrame =
-    register(embeddings).sparkSession.range(nBits)
+    embeddings.sparkSession.range(nBits)
       .selectExpr("CAST(id AS INT) AS j")
       .withColumn("plane", expr(
         // CAST to DOUBLE: bigint/decimal-literal division is DECIMAL in
@@ -317,7 +308,6 @@ object SimOps {
     // times below and int8_quant is non-cheap, so CollapseProject keeps
     // the struct materialized once per row instead of re-inlining the
     // loop into each extraction.
-    graft.functions.Int8QuantStats.register(embeddings.sparkSession)
     embeddings
       .withColumn("_q", expr("int8_quant(embedding)"))
       .withColumn("qscale", col("_q.qscale"))
@@ -374,7 +364,6 @@ object SimOps {
       dim: Int = 64, outDim: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(nQueries >= 1 && k >= 1)
-    graft.functions.L2SqLong.register(embeddings.sparkSession)
     val mv = embeddings.withColumn("mvec", expr(
       "transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000000.0D + 0.5D))"))
       .select("vec_id", "mvec")
@@ -427,8 +416,6 @@ object SimOps {
     // ±1 matrix (jlSigns discipline) and l2_sq-against-zeros replays the
     // Σx² folds — all-integer, bit-identical to the unrolled plan and
     // the oracle's embedded constants.
-    graft.functions.JlProject.register(embeddings.sparkSession)
-    graft.functions.L2SqLong.register(embeddings.sparkSession)
     val mvec =
       "transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000000.0D + 0.5D))"
     embeddings
@@ -556,7 +543,7 @@ object SimOps {
         expr(s"slice(embedding, 1 + $lo, $hi - $lo)").as("embedding"))
       val code = ClusterOps.kmeansAssign(sub, kCodes, rounds)
         .select(col("vec_id"), col("cluster").as(s"code_$s"))
-      val mv = register(embeddings).select(col("vec_id"),
+      val mv = embeddings.select(col("vec_id"),
         expr(s"""transform(slice(embedding, 1 + $lo, $hi - $lo),
                 |  x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0D + 0.5D) AS DOUBLE))""".stripMargin)
           .as("mvec"))
@@ -639,7 +626,7 @@ object SimOps {
     * array into a map-side per-row cosine; ONE final single-row agg.
     * Two narrow corpus passes, no joins wider than a row. */
   def embeddingHealth(embeddings: DataFrame): DataFrame = {
-    val vd = register(embeddings).select(col("vec_id"),
+    val vd = embeddings.select(col("vec_id"),
       expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0D + 0.5D) AS DOUBLE))")
         .as("mvec"))
       .withColumn("m2", expr(dotX("mvec", "mvec")))
@@ -750,7 +737,7 @@ object SimOps {
     require(nQueries >= 1 && k >= 1, s"need nQueries/k >= 1, got $nQueries/$k")
     val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("n_id").asc)
     def topkAt(embExpr: String): DataFrame = {
-      val e = register(embeddings)
+      val e = embeddings
         .select(col("vec_id"), expr(embExpr).as("emb"))
         .withColumn("nrm", expr(s"sqrt(${dotX("emb", "emb")})"))
       val q = e.filter(col("vec_id") < nQueries)
@@ -1005,8 +992,7 @@ object SimOps {
       k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(nQueries >= 1 && k >= 1, s"need nQueries/k >= 1, got $nQueries/$k")
-    val e = register(embeddings)
-    val codes = e
+    val codes = embeddings
       .withColumn("s",
         expr("array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))"))
       .select(col("vec_id"), expr(

@@ -22,9 +22,7 @@ object TextOps {
   /** Spark SQL fragment: 60-bit md5 hash of expression `x` — the native
     * [[graft.functions.H60Hash]] expression (round 7; bit-identical to
     * the former CONV(SUBSTRING(MD5..)) chain, which allocated three
-    * strings and parsed two per hash). Callers must
-    * `H60Hash.register(session)` before an action (operators using
-    * this fragment do). */
+    * strings and parsed two per hash). */
   def h60x(x: String): String = s"h60($x)"
 
   /** DuckDB fragment equivalent to [[h60x]]. */
@@ -82,7 +80,6 @@ object TextOps {
     * built-in formulations lose: interpreted HOF lambdas vs a corpus-wide
     * window shuffle). Docs with < n tokens get an empty array. */
   def shingled(documents: DataFrame, n: Int = 3): DataFrame = {
-    graft.functions.NgramShingles.register(documents.sparkSession)
     tokenized(documents)
       .withColumn("sh", expr(s"array_distinct(ngram_shingles(tk, $n))"))
       .drop("tk")
@@ -130,7 +127,6 @@ object TextOps {
     * per-element lambdas, the same trap fixed natively for SimHash and
     * poly_fingerprint). Still no shuffle: per-row, scales as a scan. */
   def langScored(documents: DataFrame): DataFrame = {
-    graft.functions.LangScores.register(documents.sparkSession)
     val withScores = tokenized(documents).withColumn("ls", expr("lang_scores(tk)"))
     // all s_<lang> extractions in ONE projection (round 14): the former
     // per-language withColumn fold stacked 21 Projects, each a fresh
@@ -348,7 +344,6 @@ object TextOps {
     // single leading/trailing space so word-boundary patterns match at
     // the ends of the text too (same trick both engines replay)
     val low = "concat(' ', lower(coalesce(text, '')), ' ')"
-    graft.functions.SubstrCensus.register(documents.sparkSession)
     langScored(documents)
       .withColumn("t_da", expr(orthoCensusExpr(low, daNbOrtho.head._2)))
       .withColumn("t_nb", expr(orthoCensusExpr(low, daNbOrtho(1)._2)))
@@ -391,7 +386,6 @@ object TextOps {
     val base = langScored(documents)
     val low = "concat(' ', lower(coalesce(text, '')), ' ')"
     val withLow = base.withColumn("ortho_low", expr(low))
-    graft.functions.SubstrCensus.register(documents.sparkSession)
     val censusCols = orthoPairs.flatten.map { case (lang, pats) =>
       expr(orthoCensusExpr("ortho_low", pats)).as(s"t_$lang")
     }
@@ -562,7 +556,6 @@ object TextOps {
     * comparison total: a single differing codepoint anywhere fails the
     * hash. Zero shuffles before the caller's ordering. */
   def unicodeNormalized(documents: DataFrame): DataFrame = {
-    graft.functions.NfcNormalize.register(documents.sparkSession)
     documents
       .withColumn("text_nfc", expr("nfc_normalize(text)"))
       .select(col("doc_id"),
@@ -641,7 +634,6 @@ object TextOps {
     * raw term key (the q69 lesson). Every ratio is a single division of
     * two exact longs, so the doubles replay bit-for-bit in the oracle. */
   def gopherStats(documents: DataFrame): DataFrame = {
-    graft.functions.NgramShingles.register(documents.sparkSession)
     val base = tokenized(documents)
       .select(col("doc_id"), col("tk"),
         expr("CAST(size(tk) AS BIGINT)").as("n_tokens"),
@@ -884,7 +876,6 @@ object TextOps {
     * sparse form directly instead of re-deriving it. */
   private[graft] def hashedDims(documents: DataFrame, dim: Int): DataFrame = {
     require(dim >= 1, s"dim must be >= 1, got $dim")
-    graft.functions.H60Hash.register(documents.sparkSession)
     tokenized(documents)
       .select(col("doc_id"), explode(col("tk")).as("t"))
       .select(col("doc_id"),
@@ -917,7 +908,6 @@ object TextOps {
   def qualityClassifier(documents: DataFrame, dim: Int = 256): DataFrame = {
     require(dim >= 2, s"dim must be >= 2, got $dim")
     val session = documents.sparkSession
-    graft.functions.H60Hash.register(session)
     val weights = session.range(dim).select(col("id").as("j"),
       (expr(s"pmod(${h60x("concat('w_', CAST(id AS STRING))")}, 1000001L)")
         - lit(500000L)).as("w"))
@@ -964,7 +954,6 @@ object TextOps {
     require(dim >= 2, s"dim must be >= 2, got $dim")
     require(thresholds.nonEmpty, "thresholds must be non-empty")
     val session = documents.sparkSession
-    graft.functions.H60Hash.register(session)
     val weights = session.range(dim).select(col("id").as("j"),
       (expr(s"pmod(${h60x("concat('w_', CAST(id AS STRING))")}, 1000001L)")
         - lit(500000L)).as("w"))
@@ -1078,7 +1067,6 @@ object TextOps {
   def targetAffinity(corpus: DataFrame, target: DataFrame,
       numBuckets: Int = 4096): DataFrame = {
     require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
-    graft.functions.H60Hash.register(corpus.sparkSession)
     val featureBucket = // hashed unigram+bigram occurrences, one row each
       s"""transform(
          |  concat(tk, CASE WHEN size(tk) > 1
@@ -1120,7 +1108,6 @@ object TextOps {
     * [[topTokenShare]]) → broadcast-free left join back to documents so
     * gram-less docs (< n tokens) still appear with zero counts. */
   def dupNgramStats(documents: DataFrame, n: Int = 3): DataFrame = {
-    graft.functions.NgramShingles.register(documents.sparkSession)
     val agg = tokenized(documents)
       .select(col("doc_id"), explode(expr(s"ngram_shingles(tk, $n)")).as("g"))
       .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
@@ -1440,7 +1427,6 @@ object TextOps {
     * `aggregate(transform(tk, t -> h60 % 1000003), ...)` form hashed
     * every token through the interpreted HOF evaluator. */
   def fingerprinted(documents: DataFrame): DataFrame = {
-    graft.functions.PolyFingerprint.register(documents.sparkSession)
     tokenized(documents).withColumn("fingerprint", expr("poly_fingerprint(tk)"))
   }
 
@@ -1460,8 +1446,6 @@ object TextOps {
   def simhashed(documents: DataFrame, nBits: Int = 32): DataFrame = {
     require(nBits >= 1 && nBits <= 60,
       s"nBits must be in [1,60] (h60 hashes have 60 meaningful bits), got $nBits")
-    graft.functions.SimHashBits.register(documents.sparkSession)
-    graft.functions.H60Hash.register(documents.sparkSession)
     tokenized(documents)
       .withColumn("simhash", expr(
         s"simhash_bits(transform(array_distinct(tk), t -> ${h60x("t")}), $nBits)"))
@@ -1499,7 +1483,6 @@ object TextOps {
       applyLast: Boolean): (DataFrame, DataFrame) = {
     require(rounds >= 1 && rounds <= 12,
       s"rounds must be in [1,12] (each round is a corpus pass), got $rounds")
-    graft.functions.NgramShingles.register(documents.sparkSession)
     var text = documents.select(col("doc_id"), col("text"))
     var merges: DataFrame = null
     for (r <- 1 to rounds) {
@@ -1619,7 +1602,6 @@ object TextOps {
     // smoke); the ratio/keep arithmetic below is unchanged, so results
     // stay bit-identical to the regex form the DuckDB oracle keeps
     // (spec-pinned per counter, including astral chars)
-    graft.functions.EncodingStats.register(documents.sparkSession)
     def ratio(c: String) =
       s"CASE WHEN es.n > 0 THEN CAST($c AS DOUBLE) / CAST(es.n AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END"
     documents
@@ -1667,7 +1649,6 @@ object TextOps {
   def cmsTokenCensus(documents: DataFrame, topK: Int = 20): DataFrame = {
     import graft.functions.CmsSketch
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    CmsSketch.register(documents.sparkSession)
     // ONE corpus scan (round-6 verdict item 5): both the sketch and the
     // exact top-k derive from the same exact (token, count) aggregate.
     // The weighted update cms_sketch(t, c) over grouped counts is
@@ -1753,7 +1734,6 @@ object TextOps {
     * oracle replays bit-exact). The winner census re-aggregates by its
     * OWN winner column — no gram-level join back to the corpus. */
   def ngramNovelty(documents: DataFrame, n: Int = 3): DataFrame = {
-    graft.functions.H60Hash.register(documents.sparkSession)
     val sh = shingled(documents, n)
     val nG = sh.select(col("doc_id"), size(col("sh")).cast("long").as("n_grams"))
     val rows = sh.select(col("doc_id"), explode(col("sh")).as("g0"))
@@ -1805,7 +1785,6 @@ object TextOps {
       epochs: Int = 3): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
     require(epochs >= 1 && epochs <= 8, s"epochs must be in [1, 8], got $epochs")
-    graft.functions.H60Hash.register(documents.sparkSession)
     // plain space-split (not [[tokenized]]'s CJK shim) — the oracle
     // replays string_split verbatim, the q138 tokenize contract
     val fy = documents
@@ -1940,7 +1919,6 @@ object TextOps {
   def fimExamples(documents: DataFrame,
       minTokens: Int = FimMinTokens): DataFrame = {
     require(minTokens >= 3, s"minTokens must be >= 3, got $minTokens")
-    graft.functions.H60Hash.register(documents.sparkSession)
     val tk = split(coalesce(col("text"), lit("")), " ")
     val base = documents.select(col("doc_id"), tk.as("tk"),
       size(tk).cast("long").as("n_tokens"))
@@ -2007,7 +1985,6 @@ object TextOps {
     * explode, no shuffle but the final sort) — the q141/q168 scan
     * shape, linear in input splits. */
   def watermarkScan(documents: DataFrame): DataFrame = {
-    graft.functions.H60Hash.register(documents.sparkSession)
     val tk = split(coalesce(col("text"), lit("")), " ")
     val base = documents.select(col("doc_id"), tk.as("tk"),
       size(tk).cast("long").as("n"))

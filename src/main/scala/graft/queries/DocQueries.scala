@@ -75,7 +75,6 @@ object DocQueries {
         |      FROM lineitem)
         |GROUP BY l_orderkey ORDER BY l_orderkey""",
       "SURVEY §2.1 S15: grouped document → METS-like XML render") { (s, d) =>
-      graft.functions.SortedMultiConcat.register(s)
       Tables(s, d, "lineitem")
         // raw columns cross the wire, not XML; range so the trailing
         // total order adds no exchange and no pipeline-re-running sample

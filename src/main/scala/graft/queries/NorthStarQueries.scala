@@ -593,7 +593,6 @@ object NorthStarQueries {
          |JOIN ex ON ex.event_type = a.event_type
          |ORDER BY a.event_type""",
       "Custom TypedImperativeAggregate: oracle-replayable HLL sketch") { (s, d) =>
-      HllSketch.register(s)
       Tables(s, d, "events")
         .groupBy("event_type")
         .agg(expr("hll_sketch(CAST(user_id AS STRING))").as("sk"),

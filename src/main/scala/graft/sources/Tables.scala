@@ -28,26 +28,45 @@ object Tables {
     * It is the same reuse a production session gets from a catalog table
     * (resolve once at registration, scan per query).
     *
-    * Staleness guard: the cache key carries the path's lastModified stamp,
-    * so a test fixture that overwrites its parquet dir between reads gets
-    * a fresh relation (WeakHashMap on the session keeps stopped test
-    * sessions collectable). */
+    * Staleness guard: the cache key carries the path's leaf-file
+    * signature ([[leafFiles]]), so a relation is re-resolved when any file
+    * under the path is added, removed or rewritten — at any depth of a
+    * partitioned directory and on any Hadoop filesystem (WeakHashMap on
+    * the session keeps stopped test sessions collectable). */
+  private type RelKey = (String, Seq[(String, Long, Long)])
   private val relCache =
     new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, Long), DataFrame]]()
+      java.util.concurrent.ConcurrentHashMap[RelKey, DataFrame]]()
+
+  /** (path, length, mtime) of every file under `path`, listed through the
+    * path's Hadoop `FileSystem` (the listing the parquet reader does);
+    * empty when the path does not exist, so the read reports it. Walks
+    * with `listStatus`, not `listFiles`: the latter's located statuses
+    * load owner and permissions, which the local filesystem reads by
+    * running a shell command per file. */
+  private def leafFiles(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    import org.apache.hadoop.fs.FileStatus
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk) else Seq(st)
+    val files =
+      try walk(fs.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => Nil }
+    files.map(st => (st.getPath.toString, st.getLen, st.getModificationTime)).sorted
+  }
 
   private def cachedRead(spark: SparkSession, path: String)
       (load: => DataFrame): DataFrame = {
     val m = relCache.synchronized {
       var mm = relCache.get(spark)
       if (mm == null) {
-        mm = new java.util.concurrent.ConcurrentHashMap[(String, Long), DataFrame]()
+        mm = new java.util.concurrent.ConcurrentHashMap[RelKey, DataFrame]()
         relCache.put(spark, mm)
       }
       mm
     }
-    m.computeIfAbsent((path, new java.io.File(path).lastModified()),
-      _ => load)
+    m.computeIfAbsent((path, leafFiles(spark, path)), _ => load)
   }
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
@@ -64,11 +83,16 @@ object Tables {
     * re-executing every projection below it — and on a single-split
     * local file runs it serially. Range-partitioning the RAW rows by the
     * same keys moves the one unavoidable exchange below the chain
-    * (identical row count, narrower rows: raw columns instead of raw +
-    * derived), satisfies the trailing sort's OrderedDistribution (the
-    * sort keeps no exchange of its own and adds only a per-partition
-    * sort), and lets the bound-sampling pass read the bare scan instead
-    * of the chain. Result-identical: same rows, same final total order.
+    * (identical row count), satisfies the trailing sort's
+    * OrderedDistribution (the sort keeps no exchange of its own and adds
+    * only a per-partition sort), and lets the bound-sampling pass read
+    * the bare scan instead of the chain. Result-identical: same rows,
+    * same final total order. The tradeoff is shuffle bytes: column
+    * pruning narrows the exchange to the columns the chain reads, which
+    * include the raw `text`, so a chain whose output drops `text` (q18,
+    * the lang-ID family, q168/q170) now shuffles raw text where the
+    * trailing sort's exchange carried compact derived rows — the price
+    * of running the chain once instead of twice.
     * Measured on the q156 ortho chain (sf0.1, local[32]): wall 8.08 →
     * 0.71, task 5.74 → 0.42 (isolated session; the in-bench effect is
     * ~2× wall / ~2× task — OPTIMIZATION_r15.md). */

@@ -317,7 +317,6 @@ object StreamOps {
   def paragraphDedupStream(docLines: DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val spark = docLines.sparkSession
-    graft.functions.H60Hash.register(spark)
     import spark.implicits._
     docLines
       .select(col("doc_id"), posexplode(col("lines")).as(Seq("pos", "line")))
@@ -425,7 +424,6 @@ object StreamOps {
     require(maxBucketMembers >= 1,
       s"maxBucketMembers must be >= 1, got $maxBucketMembers")
     val spark = docs.sparkSession
-    graft.functions.MinhashSig.register(spark)
     import spark.implicits._
     graft.operators.TextOps.shingled(docs)
       .withColumn("sig", expr(s"minhash_sig(sh, $k)"))

@@ -10,7 +10,6 @@ class CmsSketchSpec extends SparkSpec {
   import CmsSketch.{D, W}
 
   private def sketch(df: org.apache.spark.sql.DataFrame): Array[Long] = {
-    CmsSketch.register(spark)
     df.agg(expr("cms_sketch(v)").as("cms"))
       .head.getSeq[Long](0).toArray
   }
@@ -36,7 +35,6 @@ class CmsSketchSpec extends SparkSpec {
   }
 
   test("point estimate never underestimates and is exact without collisions") {
-    CmsSketch.register(spark)
     val values = (1 to 500).flatMap(i => Seq.fill(i % 7 + 1)(s"item$i"))
     val exact = values.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
     val est = values.toDF("v")
@@ -57,14 +55,12 @@ class CmsSketchSpec extends SparkSpec {
   }
 
   test("null input is ignored, not counted") {
-    CmsSketch.register(spark)
     val withNulls = Seq(Some("a"), None, Some("a"), None).toDF("v")
     val justAs = Seq("a", "a").toDF("v")
     assert(sketch(withNulls).toSeq === sketch(justAs).toSeq)
   }
 
   test("weighted update over grouped counts equals unit updates over the raw stream") {
-    CmsSketch.register(spark)
     val raw = Seq("the", "cat", "the", "dog", "the", "cat").toDF("v")
     val grouped = raw.groupBy("v")
       .agg(org.apache.spark.sql.functions.count(

@@ -276,7 +276,6 @@ class CurationTextSpec extends SparkSpec {
     // replay with the SAME feature derivation (h60 via the registered
     // expression so the bucket assignment cannot skew), then fold the
     // batch-perceptron rule in plain Scala
-    graft.functions.H60Hash.register(spark)
     val fy = docs
       .selectExpr("doc_id",
         "CASE WHEN lang = 'en' THEN 1L ELSE -1L END AS y",

@@ -258,8 +258,6 @@ class DedupSimSpec extends SparkSpec {
   }
 
   test("cdc_boundaries native expression is bit-identical to the interpreted HOF form") {
-    graft.functions.CdcBoundaries.register(spark)
-    graft.functions.H60Hash.register(spark) // h60x now emits h60(...)
     val winHash = graft.operators.TextOps.h60x(
       "array_join(slice(tk, CAST(i - 4 + 1 AS INT), 4), ' ')")
     val d = docs(
@@ -304,7 +302,6 @@ class DedupSimSpec extends SparkSpec {
 
   test("winnowStats guarantee: a shared >= k+w-1 token run shares a fingerprint") {
     import graft.operators.{DedupOps, TextOps}
-    graft.functions.WinnowFingerprints.register(spark)
     // two documents with entirely different text EXCEPT a planted shared
     // run of k+w-1 = 6 tokens: winnowing must select at least one common
     // fingerprint from inside the run (the SIGMOD'03 guarantee), which

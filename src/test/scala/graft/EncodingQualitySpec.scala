@@ -80,7 +80,6 @@ class EncodingQualitySpec extends SparkSpec {
   }
 
   test("native encoding_stats replays the regex formulation on the real corpus") {
-    graft.functions.EncodingStats.register(spark)
     val docs = graft.sources.Tables(spark, sf("sf0.001"), "documents")
     val native = docs.selectExpr("doc_id", "encoding_stats(text) AS es")
       .selectExpr("doc_id", "es.n AS n", "es.repl AS repl", "es.ctrl AS ctrl",
@@ -92,7 +91,6 @@ class EncodingQualitySpec extends SparkSpec {
   }
 
   test("native encoding_stats edge cases: astral chars, adjacent mojibake, NULL") {
-    graft.functions.EncodingStats.register(spark)
     val rows = Seq(
       (1L, "music 𝄞 clef"),     // U+1D11E: ONE code point, non-ASCII once
       (2L, "Ã Ã â€â€ x"),                  // adjacent pairs count non-overlapping
@@ -114,7 +112,6 @@ class EncodingQualitySpec extends SparkSpec {
   }
 
   test("encoding_stats interpreted eval and codegen agree") {
-    graft.functions.EncodingStats.register(spark)
     val df = graft.sources.Tables(spark, sf("sf0.001"), "documents")
       .selectExpr("doc_id", "encoding_stats(text) AS es")
       .selectExpr("doc_id", "es.*")

@@ -1,57 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+/** The native-function catalog: [[GraftExtensions]] is listed as a
+  * `SparkSessionExtensionsProvider` service, so a session from a plain
+  * `SparkSession.builder().getOrCreate()` (the shared [[SparkSpec]] one)
+  * resolves every row of [[GraftExtensions.functions]] with no
+  * per-session call. `--conf spark.sql.extensions=graft.GraftExtensions`
+  * names the same class. */
+class GraftExtensionsSpec extends SparkSpec {
 
-/** The `spark.sql.extensions` deployment path: a session built with
-  * `GraftExtensions` must resolve every native function with no
-  * per-session `register` calls — this is how a cluster user gets the
-  * engine's expressions (`--conf spark.sql.extensions=graft.GraftExtensions`).
-  *
-  * All suites share one forked JVM, and `getOrCreate` would silently
-  * return an earlier suite's session (ignoring `withExtensions`), so
-  * this spec clears the active/default session, builds a FRESH session
-  * (sharing the SparkContext — extensions are per-SparkSession state),
-  * and restores the previous session afterwards. */
-class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+  test("the catalog holds exactly 20 distinct native functions") {
+    val names = GraftExtensions.functions.map(_._1)
+    assert(names.size === 20)
+    assert(names.distinct.size === 20, s"duplicate names in $names")
+  }
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    // sbt may run suites in parallel threads of this JVM, so the global
-    // default-session slot is cleared only for the instant of session
-    // construction and restored immediately — the new session keeps
-    // working regardless of which session is "default" afterwards.
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      spark = SparkSession.builder()
-        .master("local[2]")
-        .appName("GraftExtensionsSpec")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prior.foreach { p =>
-        SparkSession.setDefaultSession(p)
-        SparkSession.setActiveSession(p)
-      }
+  test("every catalog row resolves through spark.sql to its expression class") {
+    GraftExtensions.functions.foreach { case (name, cls, _) =>
+      val described = spark.sql(s"DESCRIBE FUNCTION $name").collect().map(_.getString(0))
+      assert(described.contains(s"Class: ${cls.getName}"),
+        s"$name did not resolve to ${cls.getName}: ${described.mkString("; ")}")
     }
   }
 
-  override def afterAll(): Unit = ()
-
   test("all native functions resolve through SparkSessionExtensions") {
-    // guard against getOrCreate having silently reused a prior session
-    assert(spark.sessionState.functionRegistry
-      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("hll_sketch")),
-      "extensions did not apply — session was reused, not created")
     val row = spark.sql(
       """SELECT
         |  ngram_shingles(array('a', 'b', 'c', 'd'), 3) AS sh,
@@ -121,5 +92,12 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getSeq[Long](0) === Seq.fill(4)(-1L), "empty array yields the sentinel")
     assert(spark.sql("SELECT nfc_normalize('cafe\u0301')").head.getString(0)
       === "caf\u00e9", "nfc_normalize resolves and composes through extensions")
+    // h60 agrees with h60_array element-wise; l2_sq is the exact integer
+    // squared distance
+    val row5 = spark.sql(
+      "SELECT h60('a') AS h, l2_sq(array(1L, 2L), array(4L, 6L)) AS d").head
+    assert(row5.getLong(0) === graft.functions.PolyFingerprint.h60(
+      org.apache.spark.unsafe.types.UTF8String.fromString("a")))
+    assert(row5.getLong(1) === 25L)
   }
 }

@@ -8,7 +8,6 @@ class HllSketchSpec extends SparkSpec {
   import spark.implicits._
 
   private def sketch(df: org.apache.spark.sql.DataFrame, colName: String) = {
-    HllSketch.register(spark)
     df.agg(expr(s"hll_sketch(CAST($colName AS STRING))").as("sk"))
       .select("sk.v_zero", "sk.mmax", "sk.num", "sk.registers")
       .head
@@ -50,7 +49,6 @@ class HllSketchSpec extends SparkSpec {
   }
 
   test("small-range correction: linear counting kicks in and beats the raw estimate") {
-    HllSketch.register(spark)
     // tiny cardinalities are exactly where raw alpha*m^2/Z over-reads;
     // the corrected estimate must switch to linear counting (est <= 2.5m
     // and empty registers exist) and land near the true count
@@ -82,7 +80,6 @@ class HllSketchSpec extends SparkSpec {
   }
 
   test("corrected estimate replays bit-for-bit in DuckDB-equivalent JVM arithmetic") {
-    HllSketch.register(spark)
     // the CASE ladder ships PRECOMPUTED literals: selecting lut[v_zero]
     // and multiplying by 64.0 must equal the Scala-side reference exactly
     val row = (1 to 12).map(i => s"x$i").toDF("v")
@@ -99,7 +96,6 @@ class HllSketchSpec extends SparkSpec {
   }
 
   test("estimates are within tolerance on real grouped data (vs exact)") {
-    HllSketch.register(spark)
     val rows = graft.sources.Tables(spark, sf("sf0.01"), "events")
       .groupBy("event_type")
       .agg(expr("hll_sketch(CAST(user_id AS STRING))").as("sk"),

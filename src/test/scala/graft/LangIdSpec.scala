@@ -430,7 +430,6 @@ class LangIdSpec extends SparkSpec {
     // identically everywhere, including the corners: self-overlapping
     // patterns (greedy left-to-right: 'ee'×2 in 'eeee', ×1 in 'eee'),
     // multi-byte patterns at string edges, adjacent matches, and NULL
-    graft.functions.SubstrCensus.register(spark)
     val pats = Seq("ee", "ão", "ç", " af ", "l·l")
     val texts = Seq("eeee", "eee", "e", "", "ãoão", "xãoxão", "ç", "çç",
       " af af ", " af  af ", "l·ll·l", "al·l·la", "ão ç ee af l·l",

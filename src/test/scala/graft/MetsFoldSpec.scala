@@ -14,9 +14,6 @@ import org.apache.spark.sql.functions._
 class MetsFoldSpec extends SparkSpec {
   import spark.implicits._
 
-  graft.functions.MetsFold.register(spark)
-  graft.functions.SortedMultiConcat.register(spark)
-
   /** The pre-round-15 chain, verbatim (L1 agg → ord window → L2 agg),
     * over the same pre-rendered columns the fold consumes. */
   private def oldChain(rendered: DataFrame): DataFrame = {

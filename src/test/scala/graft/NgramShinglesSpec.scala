@@ -2,13 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.NgramShingles
-
 class NgramShinglesSpec extends SparkSpec {
   import spark.implicits._
 
   private def shingles(text: String, n: Int = 3): Seq[String] = {
-    NgramShingles.register(spark)
     Seq(text).toDF("text")
       .selectExpr(s"ngram_shingles(split(text, ' '), $n) AS sh")
       .as[Seq[String]].head()
@@ -29,7 +26,6 @@ class NgramShinglesSpec extends SparkSpec {
   }
 
   test("interpreted eval and codegen agree") {
-    NgramShingles.register(spark)
     val df = graft.sources.Tables(spark, sf("sf0.001"), "documents")
       .selectExpr("doc_id", "ngram_shingles(split(text, ' ')) AS sh")
     val codegen = df.withColumn("h", hash(col("sh"))).agg(sum("h")).head.getLong(0)
@@ -41,7 +37,6 @@ class NgramShinglesSpec extends SparkSpec {
   }
 
   test("matches the higher-order-function formulation on real data") {
-    NgramShingles.register(spark)
     val docs = graft.sources.Tables(spark, sf("sf0.001"), "documents")
     val native = docs.selectExpr("doc_id",
       "ngram_shingles(split(text, ' '), 3) AS sh")

@@ -277,7 +277,6 @@ class RandomizedSpec extends SparkSpec {
     // one-loop native signature and the batch explode->k-min aggregation
     // must agree on EVERY input, including short docs and repeated tokens
     import org.apache.spark.sql.functions.{col, expr}
-    graft.functions.MinhashSig.register(spark)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon",
       "zeta", "eta", "theta", "x1", "y2")
     val docs = (1L to 120L).map { i =>

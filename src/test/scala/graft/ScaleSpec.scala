@@ -187,8 +187,8 @@ class ScaleSpec extends SparkSpec {
       "q165_pair_evidence" -> 10,    // round-13 reshape: the q36 candidate/verify chain AND the pair-doc shingle table (`pd`, ONE corpus explode semi-joined to the broadcast pair-doc set) run off-plan behind localCheckpoints; on-plan every exchange carries pair-bounded rows — pd-derived a-join/b-semi-join, shared-shingle distinct, census agg (semi-joined to shared shingles before aggregating; its corpus side is a map-side scan), per-pair rank window, sort. Was 14 exchanges with two corpus-keyed shuffles; the count ROSE 6→10 vs the first reshape because pd's bounded derivations moved on-plan while the second corpus explode left the plan entirely
       "q167_margin_mining_gated" -> 6, // candidate generation (ivfAssign crossJoin w/ k-row centroid broadcast + argmax window + same-cell equi-join) runs off-plan behind the pair localCheckpoint; on-plan: two top-km rank windows + their partial-agg sums joined by SHUFFLE (gated populations may be corpus-sized — q158's broadcast contract lifted) + a_id max(struct) winner agg + sort
       "q168_pii_redaction" -> 1,     // pure per-row codegen'd regex + Luhn HOF arithmetic + sort — the q141 scan shape; the whole scale argument
-      "q169_fim_examples" -> 1,      // per-row token arithmetic (h60 split points, slices, md5) + union of the short-doc passthrough + sort — scan-shaped
-      "q170_watermark_detect" -> 1,  // per-row green-count fold over the token array (no explode) + union of the short-doc passthrough + sort — the q168/q169 scan shape
+      "q169_fim_examples" -> 1,      // ONE doc_id range exchange on the scan (Tables.byOrder) + per-row token arithmetic (h60 split points, slices, md5; short docs pass through a per-row CASE, no union) + the trailing sort, which adds no exchange — scan-shaped
+      "q170_watermark_detect" -> 1,  // ONE doc_id range exchange on the scan (Tables.byOrder) + per-row green-count fold over the token array (no explode; short docs pass through a per-row CASE, no union) + the trailing sort, which adds no exchange — the q168/q169 scan shape
       "q171_lev_neardup" -> 2,       // blocked equi-join (BroadcastExchange at spec scale; shuffles on the prefix block key at corpus scale — either way bounded per block) + sort; the O(L^2) DP runs per surviving candidate only
       "q172_sq8_recall" -> 7,        // only the float-truth top-k is localCheckpointed (the quantize scan stays on-plan — its code-table checkpoint was removed per BENCH_NOTES); on-plan: code rank window + truth/code semi-join (2) + per-probe hit agg + probe distinct + join-back + sort — the q107/q163 recall tail
       "q173_preference_pairs" -> 2,  // ONE (user, task) groupBy with max/min(struct) partial aggs + sort — no join, no window

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.SortedMultiConcat
-
 /** `sorted_multi_concat` (round-8 verdict item 1): the incremental
   * key-ordered concat aggregate must reproduce the collect_list →
   * sort_array → getField → array_join chain it replaces, byte for byte,
@@ -11,8 +9,6 @@ import graft.functions.SortedMultiConcat
   * serialize/merge/deserialize). */
 class SortedConcatSpec extends SparkSpec {
   import spark.implicits._
-
-  SortedMultiConcat.register(spark)
 
   private def corpus = (1 to 500).map { i =>
     val g = i % 7

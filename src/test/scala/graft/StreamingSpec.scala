@@ -193,7 +193,6 @@ class StreamingSpec extends SparkSpec {
   test("minhash_sig: per-row native signature equals the aggregation-derived one") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.MinhashSig.register(spark)
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog tonight"),
       (2L, "a completely different document about spark streaming state"),

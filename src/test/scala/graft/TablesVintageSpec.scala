@@ -82,6 +82,27 @@ class TablesVintageSpec extends SparkSpec {
     }
   }
 
+  test("relation cache re-resolves when a file in a nested partition directory is replaced") {
+    val dir = tmpDir("nested-partition")
+    val table = s"$dir/region.parquet"
+    Seq((0L, "a", "x"), (1L, "b", "y")).toDF("r_regionkey", "r_name", "part")
+      .coalesce(1).write.partitionBy("part").parquet(table)
+    assert(Tables(spark, dir, "region").count() === 2L)
+    // swap part=x's one data file for a 3-row file of a new name; the
+    // top-level directory's own mtime does not move
+    val staged = tmpDir("nested-partition-staged")
+    Seq((2L, "c"), (3L, "d"), (4L, "e")).toDF("r_regionkey", "r_name")
+      .coalesce(1).write.mode("overwrite").parquet(staged)
+    val xDir = new java.io.File(s"$table/part=x")
+    xDir.listFiles().foreach(_.delete())
+    val fresh = new java.io.File(staged).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    java.nio.file.Files.move(fresh.toPath, new java.io.File(xDir, "part-fresh.parquet").toPath)
+    val got = Tables(spark, dir, "region").orderBy("r_regionkey")
+      .select("r_regionkey", "part").as[(Long, String)].collect().toSeq
+    assert(got === Seq((1L, "y"), (2L, "x"), (3L, "x"), (4L, "x")))
+  }
+
   test("unsupported ts type fails loudly, not at analysis of a downstream query") {
     val df = Seq((1L, "oops")).toDF("event_id", "ts")
     val ex = intercept[IllegalArgumentException](Tables.normalizeTs(df))

@@ -2,19 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{DotProduct, Int8QuantStats, JlProject, L2SqLong, PolyFingerprint, SimHashBits}
 import graft.operators.{SimOps, TextOps}
 
 class VectorExprsSpec extends SparkSpec {
   import spark.implicits._
-
-  private def registerAll(): Unit = {
-    DotProduct.register(spark)
-    SimHashBits.register(spark)
-    Int8QuantStats.register(spark)
-    PolyFingerprint.register(spark)
-    graft.functions.H60Hash.register(spark)
-  }
 
   /** The round-1 interpreted HOF formulation dot_product must replay
     * bit-for-bit (same products, same left fold from 0.0). */
@@ -23,7 +14,6 @@ class VectorExprsSpec extends SparkSpec {
       |  CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin
 
   test("dot_product is bit-identical to the aggregate(zip_with) fold on real embeddings") {
-    registerAll()
     val e = graft.sources.Tables(spark, sf("sf0.001"), "embeddings")
     // every unordered pair of the first 40 vectors, both float arrays
     val l = e.filter(col("vec_id") < 40).select(col("vec_id").as("ia"), col("embedding").as("a"))
@@ -41,7 +31,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("dot_product handles mixed float/double arrays and mismatched lengths") {
-    registerAll()
     val out = Seq((Array(1.0f, 2.0f, 3.0f), Array(0.5, 0.25, 2.0)))
       .toDF("a", "b")
       .selectExpr("dot_product(a, b) AS d").head.getDouble(0)
@@ -52,7 +41,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("dot_product interpreted eval and codegen agree") {
-    registerAll()
     val df = graft.sources.Tables(spark, sf("sf0.001"), "embeddings")
       .selectExpr("dot_product(embedding, embedding) AS d")
     val codegen = df.agg(sum("d")).head.getDouble(0)
@@ -63,7 +51,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("simhash_bits is identical to the nested-aggregate HOF formulation") {
-    registerAll()
     val docs = graft.sources.Tables(spark, sf("sf0.001"), "documents")
     val hs = s"transform(array_distinct(split(text, ' ')), t -> ${TextOps.h60x("t")})"
     val hof = docs.selectExpr("doc_id",
@@ -93,7 +80,6 @@ class VectorExprsSpec extends SparkSpec {
       |  END)""".stripMargin
 
   test("int8_quant is bit-identical to the four-HOF formulation on real embeddings") {
-    registerAll()
     val e = graft.sources.Tables(spark, sf("sf0.001"), "embeddings")
     val hof = e
       .withColumn("qscale", expr(
@@ -113,7 +99,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("int8_quant edge cases: empty, zero, and null-element vectors") {
-    registerAll()
     val df = Seq(
       (1L, Some(Array(1.0f, -2.0f, 0.5f))),
       (2L, Some(Array.empty[Float])),
@@ -137,7 +122,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("int8_quant interpreted eval and codegen agree") {
-    registerAll()
     val df = graft.sources.Tables(spark, sf("sf0.001"), "embeddings")
       .selectExpr("vec_id", "int8_quant(embedding) AS q")
       .selectExpr("vec_id", "q.qscale", "q.qvec", "q.sum_q_abs", "q.mse")
@@ -150,7 +134,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("poly_fingerprint is identical to the aggregate(transform) HOF formulation") {
-    registerAll()
     val docs = graft.sources.Tables(spark, sf("sf0.001"), "documents")
       .withColumn("tk", split(col("text"), " "))
     val hof = docs.selectExpr("doc_id",
@@ -162,7 +145,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("poly_fingerprint edge cases and interpreted/codegen agreement") {
-    registerAll()
     val df = Seq(
       (1L, Some(Seq(Some("alpha"), Some("beta")))),
       (2L, Some(Seq.empty[Option[String]])),   // empty → init 7
@@ -181,7 +163,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("h60 native expression is bit-identical to the CONV(SUBSTRING(MD5)) chain") {
-    registerAll()
     val convChain = (x: String) =>
       s"CAST(CONV(SUBSTRING(MD5($x), 1, 15), 16, 10) AS BIGINT)"
     // real corpus text AND every exploded token (covers multi-byte UTF-8,
@@ -206,7 +187,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("h60 interpreted eval and codegen agree") {
-    registerAll()
     val df = graft.sources.Tables(spark, sf("sf0.001"), "documents")
       .selectExpr("doc_id", "h60(text) % 1000000007L AS h") // modded: raw 60-bit sums overflow
     val codegen = df.agg(sum("h")).head.getLong(0)
@@ -217,7 +197,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("l2_sq is identical to the unrolled element_at difference chain it replaced") {
-    L2SqLong.register(spark)
     val mv = graft.sources.Tables(spark, sf("sf0.001"), "embeddings")
       .selectExpr("vec_id",
         "transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000000.0D + 0.5D)) AS mvec")
@@ -236,7 +215,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("l2_sq null conventions and interpreted/codegen agreement") {
-    L2SqLong.register(spark)
     val df = Seq(
       (1L, Some(Seq(1L, 2L, 3L)), Some(Seq(4L, 6L, 3L))),
       (2L, Some(Seq(1L, 2L)), Some(Seq(1L))), // length mismatch
@@ -254,7 +232,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("jl_project is identical to the unrolled jlSigns literal sums it replaced") {
-    JlProject.register(spark)
     val (dim, outDim) = (64, 8)
     val signs = SimOps.jlSigns(dim, outDim)
     val mv = graft.sources.Tables(spark, sf("sf0.001"), "embeddings")
@@ -278,7 +255,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("jl_project null conventions and interpreted/codegen agreement") {
-    JlProject.register(spark)
     val df = Seq(
       (1L, Some(Seq(3L, -2L, 5L, 7L))),
       (2L, Some(Seq(1L, 2L))), // wrong length vs dim=4
@@ -299,7 +275,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("simhash_bits interpreted eval and codegen agree") {
-    registerAll()
     val df = Seq(
       (1L, Array(7L, 12L, 255L, 1023L)),
       (2L, Array(0L, 1L)),
