@@ -713,29 +713,35 @@ object Jp2Codec {
 
   /** Tier-1 encoded code block: the per-pass codeword segments
     * concatenated (termination on every pass — COD style 0x04), the
-    * total pass count, EXACT cumulative byte ends after each pass (the
+    * coded pass count, EXACT cumulative byte ends after each pass (the
     * truncation points Tier-2 allocates layers on and signals as
     * per-segment lengths), and the coded bitplane count. */
-  private[graft] final case class CodedBlock(x0: Int, y0: Int, w: Int, h: Int,
-      data: Array[Byte], passes: Int, passBytes: Array[Int], bitplanes: Int)
+  private[graft] final case class CodedBlock(data: Array[Byte], passes: Int,
+      passBytes: Array[Int], bitplanes: Int) {
+    /** Bytes of the first `n` passes. */
+    def end(n: Int): Int = if (n == 0) 0 else passBytes(n - 1)
+  }
 
-  /** EBCOT Tier-1 encoder (Annex D): sign-magnitude coefficients of one
-    * code block → one MQ codeword segment with pass boundaries. */
-  private[graft] def encodeBlock(coeffs: Array[Int], x0: Int, y0: Int,
-      w: Int, h: Int, orient: Int): CodedBlock = {
-    val mag = coeffs.map(v => math.abs(v))
-    val maxMag = if (mag.isEmpty) 0 else mag.max
-    var bitplanes = 0
-    while ((maxMag >> bitplanes) != 0) bitplanes += 1
-    if (bitplanes == 0)
-      return CodedBlock(x0, y0, w, h, Array.empty, 0, Array.empty, 0)
-    val st = new T1State(w, h, orient)
-    val mq = new MqEncoder
-    val passBytes = ArrayBuffer[Int]()
+  /** EBCOT Tier-1 encoder (Annex D) for one code block's sign-magnitude
+    * coefficients, resumable: each [[next]] codes one more pass as its
+    * own terminated MQ segment (COD style 0x04), so the bytes of the
+    * first k passes never depend on whether later passes are coded.
+    * [[Jp2Encoder]] drives it in rate-allocation order and stops once
+    * the ladder's top budget is spent. */
+  private[graft] final class BlockCoder(coeffs: Array[Int], w: Int, h: Int,
+      orient: Int) {
+    val bitplanes: Int =
+      32 - Integer.numberOfLeadingZeros(coeffs.map(math.abs).maxOption.getOrElse(0))
+    /** The MSB plane has only a cleanup pass; every lower plane has three. */
+    val passes: Int = if (bitplanes == 0) 0 else 3 * bitplanes - 2
+    private val st = new T1State(w, h, orient)
+    private val mq = new MqEncoder
+    private val data = new java.io.ByteArrayOutputStream
+    private val passBytes = ArrayBuffer[Int]()
 
-    def bit(i: Int, bp: Int): Int = (mag(i) >> bp) & 1
+    private def bit(i: Int, bp: Int): Int = (math.abs(coeffs(i)) >> bp) & 1
 
-    def encodeSign(x: Int, y: Int): Unit = {
+    private def encodeSign(x: Int, y: Int): Unit = {
       val i = y * w + x
       val (ctx, xor) = st.sc(x, y)
       val s = if (coeffs(i) < 0) 1 else 0
@@ -743,7 +749,7 @@ object Jp2Codec {
       st.neg(i) = coeffs(i) < 0
     }
 
-    def spp(bp: Int): Unit = {
+    private def spp(bp: Int): Unit = {
       var sy = 0
       while (sy < h) {
         val rows = math.min(4, h - sy)
@@ -769,7 +775,7 @@ object Jp2Codec {
       }
     }
 
-    def mrp(bp: Int): Unit = {
+    private def mrp(bp: Int): Unit = {
       var sy = 0
       while (sy < h) {
         val rows = math.min(4, h - sy)
@@ -790,7 +796,7 @@ object Jp2Codec {
       }
     }
 
-    def cup(bp: Int): Unit = {
+    private def cup(bp: Int): Unit = {
       var sy = 0
       while (sy < h) {
         val rows = math.min(4, h - sy)
@@ -841,23 +847,33 @@ object Jp2Codec {
       java.util.Arrays.fill(st.pi, false)
     }
 
-    val segs = ArrayBuffer[Array[Byte]]()
-    def endPass(): Unit = {
-      segs += mq.endSegment()
-      passBytes += segs.map(_.length).sum
+    /** Codes the next pass; returns its segment's byte length. */
+    def next(): Int = {
+      val p = passBytes.length
+      require(p < passes, "every pass is already coded")
+      if (p == 0) cup(bitplanes - 1)
+      else {
+        val bp = bitplanes - 2 - (p - 1) / 3
+        (p - 1) % 3 match { case 0 => spp(bp); case 1 => mrp(bp); case _ => cup(bp) }
+      }
+      val seg = mq.endSegment()
+      data.write(seg)
+      passBytes += data.size
+      seg.length
     }
-    var bp = bitplanes - 1
-    cup(bp); endPass() // the MSB plane has only a cleanup pass
-    bp -= 1
-    while (bp >= 0) {
-      spp(bp); endPass()
-      mrp(bp); endPass()
-      cup(bp); endPass()
-      bp -= 1
-    }
-    val data = segs.toArray.flatten
-    CodedBlock(x0, y0, w, h, data, passBytes.length, passBytes.toArray,
-      bitplanes)
+
+    /** The passes coded so far. */
+    def result: CodedBlock =
+      CodedBlock(data.toByteArray, passBytes.length, passBytes.toArray, bitplanes)
+  }
+
+  /** Codes every pass of one block; only the specs need the whole
+    * Tier-1 output ([[Jp2Encoder]] drives a [[BlockCoder]] instead). */
+  private[graft] def encodeBlock(coeffs: Array[Int], w: Int, h: Int,
+      orient: Int): CodedBlock = {
+    val coder = new BlockCoder(coeffs, w, h, orient)
+    (0 until coder.passes).foreach(_ => coder.next())
+    coder.result
   }
 
   /** Tier-1 decoder: inverts [[encodeBlock]] given the included
@@ -1200,8 +1216,10 @@ object Jp2Codec {
   * top layer's budget, like kdu's `-rate` list), `layers` = Clayers,
   * `levels` = Clevels, `tileSize` = Stiles, `codeBlock` = Cblk,
   * `precinct` = Cprecincts, `order` ∈ LRCP|RPCL (Corder), `useSop` /
-  * `useEph` = Cuse_sop/Cuse_eph, `genPlt` = ORGgen_plt. `lossless`
-  * lifts the top layer's budget so it carries every remaining pass —
+  * `useEph` = Cuse_sop/Cuse_eph, `genPlt` = ORGgen_plt. Tier-1 codes
+  * passes only until the first one that overflows the top layer's
+  * budget; the passes after it are never coded. `lossless` lifts the
+  * top layer's budget so it carries (and Tier-1 codes) every pass —
   * the archival configuration the round-trip spec proves bit-exact. */
 final case class Jp2Params(
     tileSize: Int = 256,
@@ -1254,8 +1272,10 @@ object Jp2Encoder {
 
   /** One code block's Tier-2 bookkeeping. */
   private final case class Blk(cb: CodedBlock, missingMsbs: Int,
-      layerPasses: Array[Int], layerEndBytes: Array[Int]) {
+      layerPasses: Array[Int]) {
     def firstLayer: Int = layerPasses.indexWhere(_ > 0)
+    /** Passes included in layers before `l`. */
+    def passesBefore(l: Int): Int = layerPasses.take(l).sum
   }
   private final case class BandPlan(orient: Int, bw: Int, bh: Int,
       nbx: Int, nby: Int, blocks: Array[Blk])
@@ -1332,12 +1352,13 @@ object Jp2Encoder {
     // tiles may be smaller than 2^levels — levels then still apply (the
     // coarse bands just collapse to 1×1); the DWT handles n==1 signals.
 
-    // ---- Tier-1 over every tile/comp/band
+    // ---- a Tier-1 coder for every tile/comp/band block (passes are
+    // coded later, in rate-allocation order)
     val layerCount = params.layers
     // chroma components carry one extra bit after RCT
     def compBits(c: Int): Int = if (rct && c > 0) bits + 1 else bits
     // (block, resolution, orient) for the guard-bit calculation
-    val allBlocks = ArrayBuffer[(CodedBlock, Int, Int)]()
+    val allBlocks = ArrayBuffer[(BlockCoder, Int, Int)]()
 
     val tilesRaw = (0 until ntx * nty).map { t =>
       val tx = t % ntx; val ty = t / ntx
@@ -1389,7 +1410,7 @@ object Jp2Encoder {
           resBands.map { band =>
             val nbx = math.max(1, (band.w + cb - 1) / cb)
             val nby = math.max(1, (band.h + cb - 1) / cb)
-            val blocks = new Array[CodedBlock](nbx * nby)
+            val blocks = new Array[BlockCoder](nbx * nby)
             var by = 0
             while (by < nby) {
               var bx = 0
@@ -1404,9 +1425,9 @@ object Jp2Encoder {
                     cf, rr * bw2, bw2)
                   rr += 1
                 }
-                val coded = encodeBlock(cf, bx0, by0, bw2, bh2, band.orient)
-                blocks(by * nbx + bx) = coded
-                allBlocks += ((coded, rIdx, band.orient))
+                val coder = new BlockCoder(cf, bw2, bh2, band.orient)
+                blocks(by * nbx + bx) = coder
+                allBlocks += ((coder, rIdx, band.orient))
                 bx += 1
               }
               by += 1
@@ -1433,58 +1454,45 @@ object Jp2Encoder {
     // ---- Tier-2 rate allocation: greedy in global-bitplane order with
     // PER-PASS granularity. Passes are ordered step-major (step =
     // 3*plane + phase, planes counted from the global top so deeper
-    // blocks join later) and included one at a time until each layer's
-    // byte budget is spent — SNR-progressive like the bitplane-
-    // synchronized scheme, but a small budget buys the FIRST fraction
-    // of the fleet's next plane instead of nothing (the all-blocks-
-    // advance-together quantum starved the low ladder rungs).
-    val maxBp = allBlocks.map(_._1.bitplanes).foldLeft(1)(math.max)
-    val steps = 3 * maxBp
-    def passStep(blk: CodedBlock, p: Int): Int = {
-      val pf = maxBp - blk.bitplanes
-      if (p == 0) 3 * pf + 2
-      else { val q = p - 1; 3 * (pf + 1 + q / 3) + (q % 3) }
-    }
-    val buckets = Array.fill(steps)(ArrayBuffer[(Int, Int)]()) // (blockIdx, cost)
-    allBlocks.zipWithIndex.foreach { case ((blk, _, _), bi) =>
-      var p = 0
-      while (p < blk.passes) {
-        val cost = blk.passBytes(p) - (if (p == 0) 0 else blk.passBytes(p - 1))
-        buckets(passStep(blk, p)) += ((bi, cost))
-        p += 1
-      }
-    }
-    val order: IndexedSeq[(Int, Int)] = buckets.toIndexedSeq.flatten
-    val cumCost = order.scanLeft(0L) { case (acc, (_, cost)) => acc + cost }
+    // blocks join later), then by block index within a step, and
+    // included one at a time until each layer's byte budget is spent —
+    // SNR-progressive like the bitplane-synchronized scheme, but a small
+    // budget buys the FIRST fraction of the fleet's next plane instead
+    // of nothing (the all-blocks-advance-together quantum starved the
+    // low ladder rungs). Budgets meter CODED pass bytes — marker/packet-
+    // header/PLT overhead rides above the target, so emitted files run a
+    // little over the nominal bpp on small images (kdu's -rate meters
+    // total file bytes; at archival image sizes the difference is noise).
     val pixels = w.toLong * h.toLong
-    // ascending per-layer cumulative budgets from the descending ladder;
-    // budgets meter CODED pass bytes — marker/packet-header/PLT overhead
-    // rides above the target, so emitted files run a little over the
-    // nominal bpp on small images (kdu's -rate meters total file bytes;
-    // at archival image sizes the difference is noise)
-    val budgets = (0 until layerCount).map { l =>
+    val budgets = (0 until layerCount).map { l => // ascending, cumulative
       (params.rates(layerCount - 1 - l) * pixels / 8.0).toLong
     }
-    val cut = new Array[Int](layerCount) // passes included through layer l
-    var prevCut = 0
-    for (l <- 0 until layerCount) {
-      var k = prevCut
-      if (params.lossless && l == layerCount - 1) k = order.length
-      else {
-        var s = prevCut + 1
-        while (s <= order.length && cumCost(s) <= budgets(l)) { k = s; s += 1 }
+    // Tier-1 codes passes in this order and stops after the first one
+    // that overflows the top layer's budget: no cut reaches it, and each
+    // pass is its own terminated segment, so never coding the rest
+    // changes no byte. `lossless` codes every pass.
+    val maxBp = allBlocks.map(_._1.bitplanes).foldLeft(1)(math.max)
+    val order = ArrayBuffer[Int]() // block index of each coded pass
+    val cumCost = ArrayBuffer(0L)
+    for (step <- 0 until 3 * maxBp; bi <- allBlocks.indices) {
+      val blk = allBlocks(bi)._1
+      // this block codes pass p at step 3 * (its empty top planes) + 2 + p
+      val p = step - 3 * (maxBp - blk.bitplanes) - 2
+      if ((params.lossless || cumCost.last <= budgets.last) && p >= 0 && p < blk.passes) {
+        cumCost += cumCost.last + blk.next()
+        order += bi
       }
-      cut(l) = math.max(k, prevCut)
-      prevCut = cut(l)
     }
-    // every pass left out of all layers is simply not emitted (kdu's
-    // rate-limited behavior); lossless mode forces the last layer full.
+    // passes included through layer l: the longest prefix within its
+    // budget; every pass left out of all layers is simply not emitted
+    // (kdu's rate-limited behavior); lossless mode forces the last layer full.
+    val cut = budgets.indices.map { l =>
+      if (params.lossless && l == layerCount - 1) order.length
+      else math.max(0, cumCost.lastIndexWhere(_ <= budgets(l)))
+    }
     val blockLayerPasses = Array.fill(allBlocks.length)(new Array[Int](layerCount))
-    for (l <- 0 until layerCount) {
-      val from = if (l == 0) 0 else cut(l - 1)
-      var k = from
-      while (k < cut(l)) { blockLayerPasses(order(k)._1)(l) += 1; k += 1 }
-    }
+    for (l <- 0 until layerCount; k <- (if (l == 0) 0 else cut(l - 1)) until cut(l))
+      blockLayerPasses(order(k))(l) += 1
 
     // Build layer slices per block and the final per-tile plans; `gi`
     // walks allBlocks in the same traversal order it was appended in
@@ -1495,18 +1503,10 @@ object Jp2Encoder {
         val compPlans = perComp.map { resSeq =>
           resSeq.zipWithIndex.map { case (bands, rIdx) =>
             bands.map { case (orient, bw2, bh2, nbx, nby, blocks) =>
-              val blks = blocks.map { blk =>
-                val lp = blockLayerPasses(gi)
+              val blks = blocks.map { coder =>
                 gi += 1
-                val le = new Array[Int](layerCount)
-                var cp = 0
-                var l = 0
-                while (l < layerCount) {
-                  cp += lp(l)
-                  le(l) = if (cp == 0) 0 else blk.passBytes(cp - 1)
-                  l += 1
-                }
-                Blk(blk, mb(rIdx, orient) - blk.bitplanes, lp, le)
+                Blk(coder.result, mb(rIdx, orient) - coder.bitplanes,
+                  blockLayerPasses(gi - 1))
               }
               BandPlan(orient, bw2, bh2, nbx, nby, blks)
             }.toIndexedSeq
@@ -1550,11 +1550,9 @@ object Jp2Encoder {
               // per single-pass codeword segment, all in Lblock bits
               // (floor(log2(1)) = 0), Lblock raised by commas to fit
               // the largest segment
-              val startPass = blk.layerPasses.take(l).sum
-              val segLens = (0 until np).map { k =>
-                val pIdx = startPass + k
-                blk.cb.passBytes(pIdx) -
-                  (if (pIdx == 0) 0 else blk.cb.passBytes(pIdx - 1))
+              val startPass = blk.passesBefore(l)
+              val segLens = (startPass until startPass + np).map { p =>
+                blk.cb.end(p + 1) - blk.cb.end(p)
               }
               val maxLen = segLens.max
               while (maxLen >= (1 << lb(idx))) { bw.writeBit(1); lb(idx) += 1 }
@@ -1574,8 +1572,8 @@ object Jp2Encoder {
         band.blocks.foreach { blk =>
           val np = blk.layerPasses(l)
           if (np > 0) {
-            val start = if (l == 0) 0 else blk.layerEndBytes(l - 1)
-            body.write(blk.cb.data, start, blk.layerEndBytes(l) - start)
+            val start = blk.cb.end(blk.passesBefore(l))
+            body.write(blk.cb.data, start, blk.cb.end(blk.passesBefore(l) + np) - start)
           }
         }
         bi += 1

@@ -66,17 +66,39 @@ class Jp2CodecSpec extends AnyFunSuite {
     }
   }
 
-  test("EBCOT block: sign-magnitude coefficients round-trip") {
-    for ((w, h, seed) <- Seq((64, 64, 1L), (13, 7, 2L), (64, 3, 3L), (1, 1, 4L))) {
-      val coeffs = lcg(seed).take(w * h).map { v =>
+  /** EBCOT fixtures: (w, h, sign-magnitude coefficients) with planted
+    * zero runs so the cleanup pass enters run-length mode. */
+  private val ebcotFixtures: Seq[(Int, Int, Array[Int])] =
+    Seq((64, 64, 1L), (13, 7, 2L), (64, 3, 3L), (1, 1, 4L)).map { case (w, h, seed) =>
+      (w, h, lcg(seed).take(w * h).map { v =>
         val m = ((v >>> 40) % 200).toInt - 100
-        if ((v >>> 20) % 3 == 0) 0 else m // plant zero runs for RLC mode
-      }.toArray
+        if ((v >>> 20) % 3 == 0) 0 else m
+      }.toArray)
+    }
+
+  test("EBCOT block: sign-magnitude coefficients round-trip") {
+    for ((w, h, coeffs) <- ebcotFixtures) {
       for (orient <- 0 to 3) {
-        val cb = Jp2Codec.encodeBlock(coeffs, 0, 0, w, h, orient)
+        val cb = Jp2Codec.encodeBlock(coeffs, w, h, orient)
         val back = Jp2Codec.decodeBlock(cb.data, cb.passes, cb.bitplanes,
           w, h, orient, cb.passBytes)
         assert(back.toSeq === coeffs.toSeq, s"${w}x$h orient=$orient")
+      }
+    }
+  }
+
+  test("EBCOT block: a coder stopped after k passes gives the full coder's first k") {
+    for ((w, h, coeffs) <- ebcotFixtures; orient <- 0 to 3) {
+      val full = Jp2Codec.encodeBlock(coeffs, w, h, orient)
+      for (k <- Seq(0, 1, 4, full.passes).distinct.filter(_ <= full.passes)) {
+        val coder = new Jp2Codec.BlockCoder(coeffs, w, h, orient)
+        (0 until k).foreach(_ => coder.next())
+        val part = coder.result
+        val ctx = s"${w}x$h orient=$orient k=$k"
+        assert(part.passes === k, ctx)
+        assert(part.bitplanes === full.bitplanes, ctx)
+        assert(part.passBytes.toSeq === full.passBytes.take(k).toSeq, ctx)
+        assert(part.data.toSeq === full.data.take(full.end(k)).toSeq, ctx)
       }
     }
   }
@@ -371,5 +393,73 @@ class Jp2CodecSpec extends AnyFunSuite {
       params = Jp2Params(levels = 2, layers = 1, rates = Seq(32.0),
         lossless = true))
     assert(MultimodalOps.Jp2HeaderProbe.probe(plain).get.colorMeth === 1)
+  }
+
+  // ------------------------------------------------ codestream pins
+
+  /** A seeded 309×400 "scanned page" (the size the digitize path
+    * resizes a 340×440 page to): off-white paper with dark word runs
+    * on text lines. */
+  private def scannedPage(w: Int, h: Int): Seq[Array[Int]] = {
+    val rnd = lcg(2024L)
+    def next(n: Int): Int = ((rnd.next() >>> 33) % n).toInt
+    val ink = Array.fill(w * h)(-1)
+    val margin = w / 12
+    var y = margin
+    while (y + 6 < h - margin) {
+      var x = margin
+      val end = w - margin - next(w / 4)
+      while (x < end) {
+        val run = 6 + next(34); val v = 10 + next(50)
+        for (r <- y + 1 until y + 5; c <- x until math.min(x + run, end))
+          ink(r * w + c) = v
+        x += run + 4 + next(5)
+      }
+      y += 12
+    }
+    Seq(0xF4, 0xF2, 0xEC).map(paper => ink.map(v => if (v < 0) paper else v))
+  }
+
+  private def sha256(bytes: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
+      .map(b => f"${b & 0xFF}%02x").mkString
+
+  test("codestream pins: encoder output is byte-identical to its recorded digests") {
+    import graft.operators.IccProfiles
+    val page = scannedPage(309, 400)
+    val gray = grayFixture(256, 192)
+    val rgb = Seq(grayFixture(90, 70), grayFixture(90, 70).map(v => (v * 3 + 17) % 256),
+      grayFixture(90, 70).map(v => 255 - v))
+    val noise = lcg(77L).take(300 * 200).map(v => ((v >>> 40) & 0xFF).toInt).toArray
+    val cases = Seq(
+      // what Jp2EncodeTransform runs on a digitized page
+      "production 9/7 page" -> Jp2Encoder.encode(page, 309, 400, 8,
+        Jp2Params(levels = 3, irreversible = true, icc = Some(IccProfiles.sRGB))),
+      "5/3 rate-limited gray" -> Jp2Encoder.encodeGray(gray, 256, 192,
+        params = Jp2Params(levels = 4)),
+      "lossless RGB ladder" -> Jp2Encoder.encode(rgb, 90, 70,
+        params = Jp2Params(levels = 2, lossless = true)),
+      "9/7 single-layer LRCP" -> Jp2Encoder.encodeGray(smoothFixture(160, 120, 0.5),
+        160, 120, params = Jp2Params(levels = 3, layers = 1, rates = Seq(0.8),
+          order = "LRCP", tpartsR = false, irreversible = true)),
+      "multi-tile noise, 32-px blocks" -> Jp2Encoder.encodeGray(noise, 300, 200,
+        params = Jp2Params(tileSize = 128, precinct = 128, codeBlock = 32, levels = 3)))
+    // recorded from the encoder that coded every pass before the rate
+    // cut; a change meant to alter the codestream updates these and says
+    // why in its change log
+    val pinned = Map(
+      "production 9/7 page" ->
+        "bb2c5f4db05283004cfcbf3de5b924056b9bf077b4c5ca0a42ffd90d1b3f86f3",
+      "5/3 rate-limited gray" ->
+        "01aa210c766d13246d041d98bc3967330e7d678ea8821acd6e0e0103490833b5",
+      "lossless RGB ladder" ->
+        "b32c41ac7c376b82351bb45b28dc1cbfed869843fdbfed0897f2046d545469f1",
+      "9/7 single-layer LRCP" ->
+        "b223bbe496af64d8f378c6d34dcd7a1638de3f69a59cfdaf13b483f24cb51baa",
+      "multi-tile noise, 32-px blocks" ->
+        "4322a6c3872100b2f0f93dbacd50488fe7f2dace8a56e6213a3b9456a0297ecc")
+    cases.foreach { case (name, bytes) =>
+      assert(sha256(bytes) === pinned(name), name)
+    }
   }
 }

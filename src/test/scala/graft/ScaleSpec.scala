@@ -203,6 +203,19 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
+  test("q130's sampler plan shuffles once, on the group key into the stateful op") {
+    // The registry pin (q130_stream_bottomk -> 1) sees only the trailing
+    // sort: the group-key exchange sits below the lazy checkpoint of the
+    // bounded sampler output. Pin it on the pre-checkpoint plan, so a
+    // second shuffle under the checkpoint cannot hide behind it.
+    val plan = graft.streaming.StreamOps.bottomKSampleStream(
+      graft.sources.Tables(spark, sf("sf0.001"), "events"), 4)
+      .queryExecution.executedPlan.toString
+    val n = plan.linesIterator.count(_.contains("Exchange"))
+    assert(n === 1, s"q130's sampler plans $n exchanges, designed 1:\n$plan")
+    assert(plan.contains("MapGroups"), s"no stateful group operator:\n$plan")
+  }
+
   test("q69 plans no Window partitioned by the raw term key") {
     // Round-4 verdict item 1: a COUNT window partitioned by the term
     // column put every tf row of a stop-term into ONE window partition
