@@ -273,7 +273,7 @@ object NfcNormalize {
   * [[graft.operators.DedupOps.minhashSigned]]'s explode→k-min
   * aggregation, for contexts where aggregation is unavailable (a
   * streaming ingest row must carry its own signature before any
-  * stateful operator — see `StreamOps.lshNearDupStream`). Identical
+  * stateful operator). Identical
   * values by construction: the same md5-h60 element hash mod p and the
   * same [[MinhashSig.coefficients]] affine families (both replayed by
   * the DuckDB oracle's SIG CTE); an empty or all-NULL array returns

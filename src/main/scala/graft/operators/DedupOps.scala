@@ -129,8 +129,7 @@ object DedupOps {
       TextOps.shingled(documents).select(col("doc_id"), col("sh")), bands, rows)
 
   /** The per-row band→bucket fragment over a `sig` column — shared by
-    * [[lshBandedFrom]] and the streaming ingest path
-    * (`StreamOps.lshNearDupStream`) so batch and stream bucket
+    * [[lshBandedFrom]] and [[signatureAgreementPairs]] so both bucket
     * IDENTICALLY by construction. */
   private[graft] def bandBucketSql(bands: Int, rows: Int): String =
     s"""transform(sequence(0, ${bands - 1}), b -> struct(
@@ -267,12 +266,10 @@ object DedupOps {
     * verified by MINHASH-COMPONENT agreement (`agree` of k equal
     * positions, estimated Jaccard = agree/k) instead of
     * [[minhashCandidatePairs]]' true shingle Jaccard. This is the
-    * verification a STREAMING ingest can afford — state holds k longs
-    * per document, never the shingle sets — and this batch form is the
-    * ground truth `StreamOps.lshNearDupStream` is proven against
-    * (emitted pair sets are arrival-order invariant: the stream
-    * orients every pair (min, max) and agreement is a pure function of
-    * the two signatures).
+    * verification a STREAMING ingest could afford — state would hold k
+    * longs per document, never the shingle sets. Pairs are oriented
+    * (min, max) and agreement is a pure function of the two
+    * signatures, so the pair set does not depend on arrival order.
     *
     * Shape at 100 TB: candidate generation is the proven q36 bucket
     * self-join; the verify is a k-element zip per DISTINCT candidate
@@ -443,18 +440,6 @@ object DedupOps {
     * `shiftrightunsigned` so a 64-bit hash with the sign bit set still
     * buckets correctly. Scale shape: identical to MinHash-LSH
     * bucketing — bounded fan-out equi-join, no all-pairs. */
-  /** The 4-band (band, bucket) explode expression — ONE source of the
-    * shift/mask arithmetic, shared by [[hammingCandidatePairs]] and the
-    * streaming media ingest (`StreamOps.audioNearDupStream`), so batch
-    * and stream can never bucket differently (the `bandBucketSql`
-    * discipline applied to Hamming bands). */
-  private[graft] def hammingBandSql(hashCol: String, bandBits: Int): String = {
-    val mask = (1L << bandBits) - 1L
-    s"""transform(sequence(0, 3), b -> struct(
-       |  CAST(b AS INT) AS band,
-       |  shiftrightunsigned($hashCol, b * $bandBits) & ${mask}L AS bucket))""".stripMargin
-  }
-
   def hammingCandidatePairs(hashes: DataFrame, idCol: String,
       hashCol: String, maxHamming: Int = 3, bandBits: Int = 15): DataFrame = {
     require(maxHamming <= 3,
@@ -464,8 +449,12 @@ object DedupOps {
       s"bandBits must be in [1, 16] (4 bands over <= 64 bits), got $bandBits")
     val sh = hashes.select(col(idCol).as("doc_id"),
       col(hashCol).cast("long").as("simhash"))
+    val mask = (1L << bandBits) - 1L
     val banded = sh.select(col("doc_id"), col("simhash"),
-      explode(expr(hammingBandSql("simhash", bandBits))).as("e"))
+      explode(expr(s"""transform(sequence(0, 3), b -> struct(
+         |  CAST(b AS INT) AS band,
+         |  shiftrightunsigned(simhash, b * $bandBits) & ${mask}L AS bucket))""".stripMargin))
+        .as("e"))
       .select(col("doc_id"), col("simhash"), col("e.band"), col("e.bucket"))
     val a = banded.select(col("doc_id").as("a"), col("simhash").as("sh_a"),
       col("band"), col("bucket"))
@@ -978,8 +967,8 @@ object DedupOps {
     *
     * At 100 TB the join keys on (shingle, lang, block) — the same
     * bounded-fan-out argument as LSH bucketing, with hot shingles
-    * (stop-gram skew) the known failure mode → [[SkewOps]] salting if
-    * AQE's skew split isn't enough. Geometric blocks keep the per-row
+    * (stop-gram skew) the known failure mode, left to AQE's skew
+    * split. Geometric blocks keep the per-row
     * probe fan-out at a constant 3 regardless of document size.
     *
     * `maxShingleDf` (round-5 verdict item 2, made absolute in round 7)

@@ -288,37 +288,6 @@ object MultimodalOps {
     }
   }
 
-  /** REAL resize via `java.awt` + `javax.imageio` (in the JDK): decode,
-    * bilinear-scale so the long side equals the F17 target, re-encode as
-    * PNG (a deterministic, lossless JDK encoder — the reference's
-    * `convert -resize` stage, `bin/main.py:309-315`, with PNG standing
-    * in for its TIFF intermediate). Non-decodable payloads fall back to
-    * the stub's geometry-only behavior so a mixed batch never throws. */
-  object ImageIoTransform extends ImageTransform {
-    def resize(path: String, content: Array[Byte], width: Int, height: Int,
-        target: Int): TransformedMedia = {
-      val src = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(content))
-      if (src == null) StubImageTransform.resize(path, content, width, height, target)
-      else {
-        val long = math.max(src.getWidth, src.getHeight)
-        val scale = if (long <= 0) 1.0 else target.toDouble / long
-        val w = math.max(1, math.round(src.getWidth * scale).toInt)
-        val h = math.max(1, math.round(src.getHeight * scale).toInt)
-        val dst = new java.awt.image.BufferedImage(w, h,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = dst.createGraphics()
-        try {
-          g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-          g.drawImage(src, 0, 0, w, h, null)
-        } finally g.dispose()
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(dst, "png", bos)
-        TransformedMedia(path, "image/png", w, h, bos.toByteArray)
-      }
-    }
-  }
-
   /** REAL JPEG2000 encode behind the same boundary — the
     * `kdu_compress` stage itself (`bin/main.py:386-405`), closing the
     * engine's LAST stub: decode via `javax.imageio`, bilinear F17
@@ -332,7 +301,7 @@ object MultimodalOps {
     * and `MultimodalIoSpec` proves this transform's output probes as
     * JP2 with the right geometry and decodes back to the resized
     * raster. Non-decodable payloads fall back to the stub's
-    * geometry-only behavior, like [[ImageIoTransform]]. */
+    * geometry-only behavior so a mixed batch never throws. */
   object Jp2EncodeTransform extends ImageTransform {
     def resize(path: String, content: Array[Byte], width: Int, height: Int,
         target: Int): TransformedMedia = {
@@ -403,27 +372,6 @@ object MultimodalOps {
       }
   }
 
-  /** ICC color-profile ASSIGNMENT (round-11 missing item 2): the
-    * reference's convert stage tags every derivative with a profile by
-    * bit depth — 24-bit color gets `sRGB.icc`, everything else is
-    * forced to 8-bit and gets `gray22.icc` (`bin/main.py:310-311`; the
-    * profiles ship in its `lib/`). This operator reproduces that
-    * DECISION as metadata columns (`color_profile`, `convert_depth`) so
-    * a downstream encoder applies the right profile per row.
-    * Assignment is metadata routing and belongs in the plan;
-    * CONVERSION (rendering pixels through the profile) is codec work
-    * that lives behind [[ImageTransform]] with the encode ladder —
-    * `java.awt.color.ICC_Profile` can load the bytes on a real
-    * cluster, but the JDK PNG writer does not embed profiles, so the
-    * transform adapters here preserve geometry and quality parameters,
-    * not profile rendering. */
-  def withColorProfile(meta: DataFrame): DataFrame =
-    meta
-      .withColumn("color_profile",
-        when(col("bits") === 24, lit("sRGB.icc")).otherwise(lit("gray22.icc")))
-      .withColumn("convert_depth",
-        when(col("bits") === 24, lit(null).cast("int")).otherwise(lit(8)))
-
   /** One perceptual hash row: the [[imageDHash]] output shape. */
   final case class ImagePHash(doc_id: Long, phash: Long)
 
@@ -462,49 +410,6 @@ object MultimodalOps {
     }
   }
 
-  /** REAL dHash (difference hash) via `java.awt` + `javax.imageio` (in
-    * the JDK — no external dependency): decode, bilinear-scale to a 9×8
-    * grayscale grid, then bit (row·8 + col) = `gray(col+1, row) >
-    * gray(col, row)` — 64 gradient signs, the standard perceptual
-    * fingerprint (Krawetz's dHash; the same construction pHash-family
-    * libraries ship). Robust to re-encoding, resizing and small edits;
-    * a single-pixel change flips at most a handful of gradient signs,
-    * so true near-dups sit within Hamming ≤ 3 of each other.
-    * Non-decodable payloads fall back to the stub so a mixed batch
-    * never throws (the [[ImageIoTransform]] contract). */
-  object ImageIoDHashAdapter extends ImageHashAdapter {
-    def dhash(path: String, content: Array[Byte]): Long = {
-      val src = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(content))
-      if (src == null) StubDHashAdapter.dhash(path, content)
-      else {
-        val dst = new java.awt.image.BufferedImage(9, 8,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = dst.createGraphics()
-        try {
-          g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-          g.drawImage(src, 0, 0, 9, 8, null)
-        } finally g.dispose()
-        def gray(x: Int, y: Int): Int = {
-          val rgb = dst.getRGB(x, y)
-          (((rgb >> 16) & 0xff) * 299 + ((rgb >> 8) & 0xff) * 587 +
-            (rgb & 0xff) * 114) / 1000
-        }
-        var h = 0L
-        var y = 0
-        while (y < 8) {
-          var x = 0
-          while (x < 8) {
-            if (gray(x + 1, y) > gray(x, y)) h |= 1L << (y * 8 + x)
-            x += 1
-          }
-          y += 1
-        }
-        h
-      }
-    }
-  }
-
   /** Perceptual-hash every image row: (doc_id, content) → (doc_id,
     * phash). mapPartitions so a real codec initializes once per
     * partition; narrow (no shuffle), scales as a scan. */
@@ -534,109 +439,7 @@ object MultimodalOps {
     DedupOps.hammingCandidatePairs(imageDHash(files, adapter).toDF(),
       "doc_id", "phash", maxHamming, bandBits = 16)
 
-  /** One sampled frame from a (stub-decoded) video payload. */
-  final case class Frame(path: String, frame_idx: Long, offset: Long,
-      frame: Array[Byte])
-
-  /** Frame sampling for video-shaped binaries: every `stride`-th frame,
-    * where the stub "container format" is fixed-size frames of
-    * `frameBytes` (a real demuxer adapter swaps in behind the same
-    * row-explosion shape). One output row per sampled frame —
-    * explode-shaped like the page fan-out (A8), narrow, no shuffle;
-    * downstream feature extraction parallelizes per frame. */
-  def sampleFrames(media: DataFrame, stride: Int = 10,
-      frameBytes: Int = 1024): Dataset[Frame] = {
-    implicit val enc = Encoders.product[Frame]
-    media.select("path", "content").flatMap { r =>
-      val path = r.getString(0)
-      val content = r.getAs[Array[Byte]](1)
-      val nFrames = content.length / frameBytes
-      (0L until nFrames.toLong by stride.toLong).map { i =>
-        val off = i * frameBytes
-        Frame(path, i / stride, off,
-          content.slice(off.toInt, off.toInt + frameBytes))
-      }
-    }
-  }
-
-  // ------------------------------------------------- video (real demux)
-
-  /** Pluggable video demux boundary — the "real demuxer adapter swaps in
-    * behind the same row-explosion shape" promise of [[sampleFrames]],
-    * kept: [[AviMjpegAdapter]] is a REAL container parser. */
-  trait VideoAdapter extends Serializable {
-    /** Every video frame payload, in stream order. */
-    def frames(path: String, content: Array[Byte]): IndexedSeq[Array[Byte]]
-  }
-
-  /** REAL AVI/MJPEG demuxer — fully codec-free like the WAV path: AVI is
-    * RIFF (the same little-endian chunk grammar as WAV), and an MJPEG
-    * stream's frames are plain JPEG payloads the JDK's ImageIO decodes.
-    * The walk descends into LIST chunks to find `movi` and collects the
-    * video-stream chunks (`NNdc`/`NNdb` compressed/uncompressed frame
-    * ids). Malformed containers REJECT rather than misparse (the
-    * WavAudioAdapter discipline). */
-  object AviMjpegAdapter extends VideoAdapter {
-    private def le32(b: Array[Byte], o: Int): Int =
-      (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-        ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-    private def tag(b: Array[Byte], o: Int): String =
-      new String(b, o, 4, java.nio.charset.StandardCharsets.US_ASCII)
-
-    def frames(path: String, content: Array[Byte]): IndexedSeq[Array[Byte]] = {
-      require(content.length >= 12 && tag(content, 0) == "RIFF" &&
-        tag(content, 8) == "AVI ", s"$path: not a RIFF/AVI payload")
-      val out = IndexedSeq.newBuilder[Array[Byte]]
-      def isFrameId(id: String): Boolean =
-        id.length == 4 && id(0).isDigit && id(1).isDigit &&
-          (id.substring(2) == "dc" || id.substring(2) == "db")
-      def walk(from: Int, until: Int): Unit = {
-        var o = from
-        while (o + 8 <= until) {
-          val id = tag(content, o); val len = le32(content, o + 4)
-          // Long arithmetic: a hostile 0x7fffffff length overflows the
-          // Int bound check and the copy below would allocate 2 GB
-          // before any range check fires
-          require(len >= 0 && o.toLong + 8L + len.toLong <= content.length.toLong,
-            s"$path: chunk $id overruns the container")
-          if (id == "LIST") walk(o + 12, o + 8 + len) // skip the list type tag
-          else if (isFrameId(id))
-            out += java.util.Arrays.copyOfRange(content, o + 8, o + 8 + len)
-          o += 8 + len + (len & 1) // RIFF chunks are word-aligned
-        }
-      }
-      walk(12, math.min(content.length, 8 + le32(content, 4)))
-      out.result()
-    }
-  }
-
-  /** Demux a binaryFile listing of video payloads into one row per
-    * sampled frame through a REAL container parser — the real-transport
-    * form of [[sampleFrames]]'s stub container. Each sampled frame is a
-    * decodable image payload (JPEG for MJPEG streams), so the whole
-    * image toolchain ([[imageDHash]], [[resizeToTarget]], OCR adapters)
-    * applies per frame unchanged; video near-dup = frame dHash through
-    * the SAME Hamming-banded machinery. Narrow flatMap, no shuffle;
-    * downstream work parallelizes per frame. */
-  def demuxFrames(files: DataFrame, stride: Int = 10,
-      adapter: VideoAdapter = AviMjpegAdapter): Dataset[Frame] = {
-    require(stride >= 1, s"stride must be >= 1, got $stride")
-    implicit val enc = Encoders.product[Frame]
-    files.select("path", "content").flatMap { r =>
-      val path = r.getString(0)
-      val all = adapter.frames(path, r.getAs[Array[Byte]](1))
-      (0 until all.length by stride).map { i =>
-        Frame(path, (i / stride).toLong, i.toLong, all(i))
-      }
-    }
-  }
-
   // ------------------------------------------------------------- audio
-
-  /** Typed metadata of an audio payload — the audio analog of
-    * [[MediaMeta]]. */
-  final case class AudioMeta(path: String, mimetype: String, channels: Int,
-      sample_rate: Int, bits: Int, n_samples: Long, duration_ms: Long)
 
   /** Pluggable audio decode boundary. Unlike images (javax.imageio) and
     * JPEG2000 (no JVM codec — stubbed), uncompressed RIFF/PCM WAV needs
@@ -713,82 +516,6 @@ object MultimodalOps {
     }
   }
 
-  /** Probe a binaryFile listing of audio payloads into typed metadata —
-    * the S13/S14 shape for the audio modality. Partition-parallel. */
-  def probeAudio(files: DataFrame,
-      adapter: AudioAdapter = WavAudioAdapter): Dataset[AudioMeta] = {
-    implicit val enc = Encoders.product[AudioMeta]
-    files.select("path", "content").mapPartitions { rows =>
-      rows.map { r =>
-        val path = r.getString(0)
-        val content = r.getAs[Array[Byte]](1)
-        val (mime, ch, rate, bits, n) = adapter.probe(path, content)
-        AudioMeta(path, mime, ch, rate, bits, n,
-          n * 1000L / math.max(rate, 1))
-      }
-    }
-  }
-
-  /** One analysis window of an audio payload: RMS energy and
-    * zero-crossing rate in integer ppm (floored — partition- and
-    * platform-deterministic; `Math.sqrt` is IEEE correctly rounded). */
-  final case class AudioWindow(path: String, win_idx: Long, n: Int,
-      rms_ppm: Long, zcr_ppm: Long)
-
-  /** Framed audio feature extraction — REAL end to end on WAV: per
-    * non-overlapping `windowMs` window of the channel-averaged signal,
-    * RMS energy (the loudness/VAD feature) and zero-crossing rate (the
-    * cheap spectral proxy), both floored to BIGINT ppm. The explode
-    * shape mirrors [[sampleFrames]]: one narrow row per window, no
-    * shuffle; downstream aggregation parallelizes per window. A short
-    * tail window is kept (its `n` says so), matching the q63 chunking
-    * discipline. */
-  def audioFeatures(files: DataFrame,
-      adapter: AudioAdapter = WavAudioAdapter,
-      windowMs: Int = 25): Dataset[AudioWindow] = {
-    require(windowMs >= 1, s"windowMs must be >= 1, got $windowMs")
-    implicit val enc = Encoders.product[AudioWindow]
-    files.select("path", "content").flatMap { r =>
-      val path = r.getString(0)
-      val content = r.getAs[Array[Byte]](1)
-      val (_, _, rate, _, _) = adapter.probe(path, content)
-      val xs = adapter.samples(path, content)
-      val w = math.max(rate * windowMs / 1000, 1)
-      (0 until xs.length by w).map { start =>
-        val end = math.min(start + w, xs.length)
-        val n = end - start
-        var sumSq = 0.0
-        var crossings = 0L
-        var i = start
-        while (i < end) {
-          sumSq += xs(i) * xs(i)
-          if (i > start && ((xs(i) >= 0.0) != (xs(i - 1) >= 0.0))) crossings += 1L
-          i += 1
-        }
-        AudioWindow(path, (start / w).toLong, n,
-          math.floor(math.sqrt(sumSq / n) * 1e6).toLong,
-          if (n > 1) crossings * 1000000L / (n - 1) else 0L)
-      }
-    }
-  }
-
-  /** Per-payload silence-trim bounds over [[audioFeatures]] windows: the
-    * first/last window whose RMS clears `thresholdPpm`, plus totals —
-    * the lead-in/lead-out trim a speech-corpus ingest applies before
-    * transcription. One path-keyed partial aggregation. */
-  def silenceBounds(windows: Dataset[AudioWindow],
-      thresholdPpm: Long): DataFrame =
-    windows.toDF()
-      .groupBy("path")
-      .agg(
-        count(lit(1)).as("n_windows"),
-        min(when(col("rms_ppm") >= thresholdPpm, col("win_idx")))
-          .as("first_loud"),
-        max(when(col("rms_ppm") >= thresholdPpm, col("win_idx")))
-          .as("last_loud"),
-        sum(when(col("rms_ppm") >= thresholdPpm, 1L).otherwise(0L))
-          .as("n_loud"))
-
   /** One acoustic fingerprint: `afp` packs up to 60 energy-delta sign
     * bits (bit i set ⇔ frame i+1 carries more energy than frame i). */
   final case class AudioFp(doc_id: Long, afp: Long)
@@ -819,10 +546,8 @@ object MultimodalOps {
     * Scale shape: one narrow row per payload, scan-shaped
     * (mapPartitions, ZERO shuffles) — the decode cost parallelizes per
     * partition and only 16 bytes per payload move downstream. */
-  /** The fingerprint computation itself, JVM-callable so the batch
-    * scan ([[audioFingerprint]]) and the streaming ingest path
-    * (`StreamOps.audioNearDupStream`, which needs a per-row try/catch
-    * around the decode) share ONE implementation. Frames WIDEN to
+  /** The fingerprint computation itself for one payload, which
+    * [[audioFingerprint]] maps over each partition. Frames WIDEN to
     * cover the whole payload: the frame length is
     * max(frameLen, nSamples/(bits+1)), so a long recording is
     * summarized end to end — the audio analog of dHash downsampling
@@ -891,14 +616,11 @@ object MultimodalOps {
   /** One perceptual frame hash of a video payload. */
   final case class VideoFrameHash(doc_id: Long, fh: Long)
 
-  /** Per-frame perceptual hashes of a fixed-frame stub container (the
-    * [[sampleFrames]] "format": consecutive `frameBytes`-sized frames)
-    * — the scan side of [[videoNearDupPairs]]. One narrow row per
-    * frame, scan-shaped (flatMap, no shuffle). The REAL path feeds the
-    * same pair machinery from [[demuxFrames]] +
-    * [[ImageIoDHashAdapter]] per decoded frame (spec'd on genuine
-    * AVI/MJPEG bytes); the stub path is what the q155 oracle replays
-    * in SQL. */
+  /** Per-frame perceptual hashes of a fixed-frame stub container
+    * (consecutive `frameBytes`-sized frames) — the scan side of
+    * [[videoNearDupPairs]]. One narrow row per frame, scan-shaped
+    * (flatMap, no shuffle); this stub path is what the q155 oracle
+    * replays in SQL. */
   def videoFrameHashes(media: DataFrame, frameBytes: Int = 16,
       adapter: ImageHashAdapter = StubDHashAdapter): Dataset[VideoFrameHash] = {
     require(frameBytes >= 1, s"frameBytes must be >= 1, got $frameBytes")
@@ -921,10 +643,9 @@ object MultimodalOps {
     * needing re-encoded-FRAME tolerance composes the q132 Hamming
     * banding on the frame hashes before this set join).
     *
-    * Input is the (doc_id, fh) per-frame hash table so the stub
-    * container (q155's oracle-replayable path) and the real
-    * AVI/MJPEG demux + javax.imageio dHash path feed the SAME pair
-    * machinery.
+    * Input is the (doc_id, fh) per-frame hash table, so any frame
+    * source and hash (here q155's oracle-replayable stub container)
+    * feeds the SAME pair machinery.
     *
     * Scale shape — the q38 lessons applied to frames: candidates come
     * ONLY from shared RARE hashes (document frequency ≤ `dfCap`; a

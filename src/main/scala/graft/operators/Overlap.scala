@@ -46,10 +46,4 @@ private[graft] object Overlap {
     errors.find(_ != null).foreach(e => throw e)
     results.toSeq.map(_.asInstanceOf[A])
   }
-
-  /** Two heterogeneous chains. */
-  def par2[A, B](fa: () => A, fb: () => B): (A, B) = {
-    val r = par(Seq(() => fa().asInstanceOf[AnyRef], () => fb().asInstanceOf[AnyRef]))
-    (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
-  }
 }

@@ -52,28 +52,6 @@ object TextOps {
         expr(s"""filter(split(regexp_replace(text, '($cjkNoSpaceClass)', ' $$1 '), ' +'), t -> t != '')"""))
         .otherwise(split(col("text"), " ")))
 
-  /** documents + `script`: dominant-script label by codepoint-class
-    * majority (cjk / arabic / cyrillic / latin), the column downstream
-    * operators gate on before trusting space-tokenized heuristics
-    * (lang-ID profiles are Latin function words → non-Latin scripts
-    * classify `und`; gopherStats' mean-word-length junk flags are only
-    * calibrated for space-delimited scripts). "Majority" = that class
-    * covers > half the non-space characters; ties and mixed text fall
-    * through to `latin`, the permissive default. Per-row regexp counts,
-    * codegen'd, shuffle-free. */
-  def scripted(documents: DataFrame): DataFrame = {
-    val cjk = "[\u4e00-\u9fff\u3400-\u4dbf\u3040-\u30ff\uac00-\ud7af]"
-    val arabic = "[\u0600-\u06ff\u0750-\u077f]"
-    val cyrillic = "[\u0400-\u04ff]"
-    documents.withColumn("script", expr(
-      s"""CASE
-         |  WHEN regexp_count(text, '$cjk') * 2 > length(replace(text, ' ', '')) THEN 'cjk'
-         |  WHEN regexp_count(text, '$arabic') * 2 > length(replace(text, ' ', '')) THEN 'arabic'
-         |  WHEN regexp_count(text, '$cyrillic') * 2 > length(replace(text, ' ', '')) THEN 'cyrillic'
-         |  ELSE 'latin'
-         |END""".stripMargin))
-  }
-
   /** documents + `sh`: the DISTINCT n-gram shingle set as an array column,
     * built by the native [[graft.functions.NgramShingles]] expression —
     * per-row, codegen'd, shuffle-free (see its scaladoc for why both

@@ -685,7 +685,7 @@ object RefineQueries {
     // bit j = bit (j div len) of byte (j mod len); a one-byte edit
     // flips ≤ 3 of the 60 bits here) puts group-mates within Hamming 3
     // exactly like re-encodes of one photo land near each other under
-    // the real ImageIoDHashAdapter. Spark side: per-row hash →
+    // a real gradient dHash. Spark side: per-row hash →
     // 4×16-bit-banded candidate join → exact bit_count verify
     // (DedupOps.hammingCandidatePairs — pigeonhole-complete at
     // radius 3). Oracle: the identical bit-sampling formula in DuckDB

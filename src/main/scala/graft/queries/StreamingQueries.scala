@@ -166,12 +166,10 @@ object StreamingQueries {
         .orderBy("event_type", "sample_rank")
     },
 
-    // Batch ground truth of the streaming ingest near-dup detector
-    // (StreamOps.lshNearDupStream): LSH-bucketed candidates verified by
-    // MINHASH-COMPONENT agreement — the verification bounded streaming
-    // state can afford (k longs per doc, never the shingle sets). The
-    // StreamingSpec proves the multi-batch stream emits this exact
-    // distinct pair set under any micro-batch slicing.
+    // Near-dup pairs by MINHASH-COMPONENT agreement over LSH-bucketed
+    // candidates — the verification a bounded streaming state could
+    // afford (k longs per doc, never the shingle sets), run here as a
+    // batch query.
     oracle(
       "q139_stream_neardup_pairs",
       {

@@ -86,18 +86,6 @@ class DocOpsSpec extends SparkSpec {
     assert(got.getLong(1) === 6L)
   }
 
-  test("withColorProfile routes bits to the reference's ICC assignment (main.py:310-311)") {
-    val meta = Seq((24, "c.tif"), (8, "g.tif"), (1, "b.pbm"))
-      .toDF("bits", "path")
-    val got = MultimodalOps.withColorProfile(meta)
-      .select("path", "color_profile", "convert_depth").collect()
-      .map(r => r.getString(0) -> ((r.getString(1), if (r.isNullAt(2)) -1 else r.getInt(2))))
-      .toMap
-    assert(got("c.tif") === (("sRGB.icc", -1)))   // 24-bit color: sRGB, depth untouched
-    assert(got("g.tif") === (("gray22.icc", 8)))  // everything else: -depth 8 -profile gray22
-    assert(got("b.pbm") === (("gray22.icc", 8)))
-  }
-
   test("resizeToTarget keeps aspect ratio and hits the F17 target (stub codec)") {
     val media = Seq(
       ("/s/a.tif", Array.fill[Byte](4000)(7), 3247, 1100),
@@ -114,17 +102,5 @@ class DocOpsSpec extends SparkSpec {
     assert(out("/s/a.tif").content.length <= 4000)
     val again = MultimodalOps.resizeToTarget(media).collect().map(m => m.path -> m.content.toSeq).toMap
     assert(out.map { case (k, v) => k -> v.content.toSeq } === again)
-  }
-
-  test("sampleFrames emits every stride-th fixed-size frame with offsets") {
-    // 10 frames of 4 bytes; stride 3 → frames 0, 3, 6, 9
-    val payload = (0 until 40).map(_.toByte).toArray
-    val media = Seq(("/v/clip.bin", payload)).toDF("path", "content")
-    val frames = MultimodalOps.sampleFrames(media, stride = 3, frameBytes = 4)
-      .orderBy("frame_idx").collect()
-    assert(frames.map(_.offset).toSeq === Seq(0L, 12L, 24L, 36L))
-    assert(frames.map(_.frame_idx).toSeq === Seq(0L, 1L, 2L, 3L))
-    assert(frames.forall(_.frame.length === 4))
-    assert(frames(1).frame.toSeq === payload.slice(12, 16).toSeq)
   }
 }

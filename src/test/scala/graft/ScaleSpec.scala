@@ -12,9 +12,26 @@ import graft.operators.DedupOps
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Every registry query built ONCE on sf0.001, sorted by name: (name,
+    * executed-plan text, whether the optimized plan has a Window with an
+    * EMPTY partition spec). A build runs the query's eager checkpoint
+    * jobs, so the whole-registry pins below share these builds instead
+    * of rebuilding all 175 queries each. */
+  private lazy val registryPlans: Seq[(String, String, Boolean)] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val qe = fn(spark, sf("sf0.001")).queryExecution
+      val emptyWindow = qe.optimizedPlan.collect {
+        case w: LWindow if w.partitionSpec.isEmpty => w
+      }.nonEmpty
+      (name, qe.executedPlan.toString, emptyWindow)
+    }
+  }
+  private lazy val executedPlans: Map[String, String] =
+    registryPlans.map { case (name, plan, _) => name -> plan }.toMap
+
   test("no registered query plans a CartesianProduct") {
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan = fn(spark, sf("sf0.001")).queryExecution.executedPlan.toString
+    registryPlans.foreach { case (name, plan, _) =>
       assert(!plan.contains("CartesianProduct"),
         s"$name plans a CartesianProduct — quadratic at scale")
     }
@@ -56,8 +73,7 @@ class ScaleSpec extends SparkSpec {
       "q163_truncation_recall", // bounded probe-set broadcast per evaluated dim (the q39/q107 shape)
       "q164_maxpassage_bm25", // 1-row (n_chunks, total_len) totals broadcast (the q142 shape at chunk granularity)
       "q172_sq8_recall") // bounded probe-set broadcast, float truth + code ranking (the q39/q107 shape)
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan = fn(spark, sf("sf0.001")).queryExecution.executedPlan.toString
+    registryPlans.foreach { case (name, plan, _) =>
       if (plan.contains("BroadcastNestedLoopJoin")) {
         assert(bounded(name), s"$name plans an unexpected BroadcastNestedLoopJoin")
         assert(plan.contains("BuildRight") || plan.contains("BuildLeft"))
@@ -195,8 +211,7 @@ class ScaleSpec extends SparkSpec {
       "q174_phrase_match" -> 1,      // array_contains gate + per-row positional lambda + sort — pure scan shape
       "q175_neardup_fusion" -> 14)   // the three PROVEN detector chains (q36's LSH candidate/verify, q59's Hamming bands, q171's block join — broadcast at spec scale) + pair-keyed fusion agg + sort; every exchange is one of the detectors' designed bounds, fusion adds ONE
     designed.foreach { case (name, expected) =>
-      val plan = SparkEntry.queries(name)(spark, sf("sf0.001"))
-        .queryExecution.executedPlan.toString
+      val plan = executedPlans(name)
       val n = plan.linesIterator.count(_.contains("Exchange"))
       assert(n === expected,
         s"$name plans $n exchanges, designed $expected — shuffle shape changed")
@@ -250,11 +265,8 @@ class ScaleSpec extends SparkSpec {
     // EliminateWindowPartitions — which runs before this optimizedPlan
     // snapshot — cannot strip it); this pin keeps every future window
     // either genuinely partitioned or explicitly const-keyed.
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val lp = fn(spark, sf("sf0.001")).queryExecution.optimizedPlan
-      val bad = lp.collect { case w: LWindow if w.partitionSpec.isEmpty => w }
-      assert(bad.isEmpty,
+    registryPlans.foreach { case (name, _, emptyWindow) =>
+      assert(!emptyWindow,
         s"$name plans a Window with an empty partition spec — " +
           "WindowExec's single-partition WARN would pollute bench stdout " +
           "(use Scalars.constPartitionKey for bounded global windows)")
@@ -315,9 +327,8 @@ class ScaleSpec extends SparkSpec {
     // 600 docs, 120 sharing identical text → one (band, bucket) key per
     // band holds 120 rows on both sides of the candidate self-join.
     // At 100 TB this is the stop-phrase/boilerplate cluster; the engine's
-    // answer is AQE skew-split (SkewOps.saltedJoin is the manual
-    // fallback). Thresholds are lowered so the tiny fixture trips the
-    // same machinery.
+    // answer is AQE skew-split. Thresholds are lowered so the tiny
+    // fixture trips the same machinery.
     val docs = (1 to 600).map { i =>
       val text =
         if (i <= 120) "common boilerplate header repeated across the corpus verbatim"

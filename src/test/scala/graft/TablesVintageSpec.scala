@@ -74,7 +74,7 @@ class TablesVintageSpec extends SparkSpec {
       val ckpt = tmpDir(s"vintage-stream-ckpt-$name")
       val got = StreamOps.runAvailableNow(
         spark, StreamOps.eventsStream(spark, s"$dir/events.parquet", glob = "*.parquet"),
-        s"vintage_$name".replace('-', '_'), ckpt)
+        s"vintage_$name".replace('-', '_'), ckpt, "append")
       val batch = Tables.events(spark, dir)
       assert(got.schema("ts").dataType === TimestampType)
       assert(got.orderBy("event_id").select("event_id", "ts").collect().toSeq
