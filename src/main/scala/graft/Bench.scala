@@ -1,19 +1,9 @@
 package graft
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession.{Clock, Rep}
 
 object Bench {
-
-  /** SPARK_GRAFT_METHOD_SPLIT, validated to digits-only: the value is
-    * interpolated UNQUOTED into the JSON records (`"method_split":N`),
-    * so a stray '+2048' or empty string would invalidate the record
-    * line the driver parses (the exact parsed:null failure the stdout
-    * discipline below exists to prevent). Anything non-numeric falls
-    * back to Spark's default. */
-  private[graft] val methodSplit: String =
-    sys.env.get("SPARK_GRAFT_METHOD_SPLIT").map(_.trim)
-      .filter(s => s.nonEmpty && s.forall(_.isDigit)).getOrElse("1024")
 
   /** Wall-clock is contention-sensitive: a busy neighbor on the host can
     * double every reading without any plan change (the round-5 record read
@@ -27,61 +17,16 @@ object Bench {
     * single steady rep for the same reason.
     */
   def main(args: Array[String]): Unit = {
+    // Query names as args: time only those (a single-query A/B). A
+    // filtered run is never a record — see outDir below.
+    val only = args.toSet
+    val unknown = only.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // collect_list plans ObjectHashAggregate, which abandons hash
-      // aggregation after 128 distinct keys per partition and sorts the
-      // full payload instead — pathological for the doc-assembly queries
-      // (q42/q43/q52 hold 10⁴-10⁵ bounded-size groups per partition that
-      // fit in memory trivially). Raise the fallback so hash aggregation
-      // actually runs; sort_array keeps results order-deterministic
-      // either way. 262144, NOT "effectively infinite" (round 10): the
-      // fallback is the operator's ONLY memory valve (entry COUNT, not
-      // bytes) — the 1M setting let the q52 aggregate ride 16 M ~1 KB
-      // buffers straight past a 24 GiB heap at the 100× smoke. 256k ≈
-      // 256 MB/task at that payload: unreachable at sf0.1 (≤ 5k
-      // groups/partition — behavior and timings identical), engaged
-      // before death beyond.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      // A long-lived session running 130+ distinct plans evicts
-      // generated classes at the default cache size; keeping them
-      // resident avoids recompilation churn. (The intermittent ~10x
-      // CPU inflation once blamed on this was root-caused in round 8
-      // to G1 itself — see build.sbt's UseParallelGC note and
-      // profiles/q52_r8_*.jsonl; the larger cache stays because it is
-      // independently correct for a 130-plan session.)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      // A/B lever for the KNOWN residual (BENCH_NOTES "stuck-below-C2"):
-      // each ~600-plan session draws 1-2 random queries at 3-12× task CPU
-      // with task≈cpu, zero gc, zero new codegen classes — a generated
-      // method that never reached C2. Splitting generated code into
-      // smaller methods (lower threshold) changes what HotSpot is asked
-      // to compile; the env knob lets a full-session A/B run without a
-      // code edit. Default = Spark's default (1024), so records are
-      // comparable across rounds unless the knob is set explicitly.
-      .config("spark.sql.codegen.methodSplitThreshold", Bench.methodSplit)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Per-stage executor run/CPU accumulation. Stage-completed events
-    // arrive asynchronously on the listener bus; each timed run snapshots
-    // the counters after a short settle window.
-    val runMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val cpuMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        runMs.addAndGet(m.executorRunTime)
-        cpuMs.addAndGet(m.executorCpuTime / 1000000L)
-      }
-    })
+    val spark = GraftSession.local(cpus)
+    val clock = new Clock(spark)
 
     // Warm the session once (JIT, codegen cache, file index) so the first
     // timed query doesn't absorb JVM/session startup; queries run in name
@@ -89,40 +34,6 @@ object Bench {
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
 
-    // Per-rep environment stamps (round-11
-    // verdict item 1): the q125/q123/q124 driver-record cluster read 2–6×
-    // every builder record with wall≫task, the same shape q52 had before its
-    // r10 root-cause. A rep that carries its own JIT-compile delta, GC delta,
-    // and 1-minute system load self-identifies as "re-JIT storm" (jitSec
-    // jumps), "collector churn" (gcSec jumps), or "busy neighbor" (sysLoad ≫
-    // cpus) without a separate profiling session.
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
-    def gcMillis(): Long =
-      ManagementFactory.getGarbageCollectorMXBeans.asScala
-        .map(_.getCollectionTime).sum
-    def jitCompileMs(): Long = {
-      val c = ManagementFactory.getCompilationMXBean
-      if (c != null && c.isCompilationTimeMonitoringSupported)
-        c.getTotalCompilationTime else 0L
-    }
-    def codeCacheMb(): Double =
-      ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getName.startsWith("CodeHeap"))
-        .map(_.getUsage.getUsed / 1048576.0).sum
-    def sysLoad(): Double =
-      ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
-    // Janino codegen class count: a rep that recompiles its generated
-    // code shows a POSITIVE delta; the interpreter-multiplier signature
-    // is the opposite — CPU x10 with ZERO new classes (and the flags
-    // build.sbt pins against it: PerMethodRecompilationCutoff=-1).
-    def cgClasses(): Long =
-      org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_SOURCE_CODE_SIZE.getCount
-
-    final case class Rep(wall: Double, taskSec: Double, cpuSec: Double,
-      gcSec: Double, jitSec: Double, codeMb: Double, load: Double,
-      cgNew: Long)
     // `steady` = the reps the medians are computed over; `flagged` = reps
     // displaced by the load gate, `jitFlagged` = reps displaced by the
     // JIT gate (both kept in-record so every reading survives, per the
@@ -138,39 +49,10 @@ object Bench {
       def steadyWallMax: Double = if (steady.isEmpty) -1.0 else steady.map(_.wall).max
     }
 
-    def timedRun(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame):
-        Option[Rep] = {
-      // start every timed run from a collected heap AND an empty block
-      // manager: without the gc, a payload query's run inherits its
-      // predecessor's multi-GB garbage and pays someone else's full GC
-      // inside the timer; without the unpersist, every localCheckpoint
-      // the previous rep/query materialized stays pinned until the
-      // ContextCleaner gets to it — and that asynchronous block removal
-      // then runs INSIDE the next timed window (r12 run3: q120's three
-      // steady reps read 1.4 -> 3.8 -> 11.8 s, zero gc, zero new codegen
-      // classes — the progressive signature of its own two checkpoints
-      // per rep accumulating). Both run BEFORE t0, excluded
-      // symmetrically; a per-job cluster gives every query exactly this
-      // (an empty block manager), so the cleanup matches the deployment
-      // premise rather than flattering it.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      runMs.set(0L); cpuMs.set(0L)
-      val gc0 = gcMillis(); val jit0 = jitCompileMs(); val cg0 = cgClasses()
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case _: Throwable => false }
-      val wall = (System.nanoTime() - t0) / 1e9
-      if (!ok) None
-      else {
-        Thread.sleep(300) // listener-bus settle before counter snapshot
-        Some(Rep(wall, runMs.get / 1000.0, cpuMs.get / 1000.0,
-          (gcMillis() - gc0) / 1000.0, (jitCompileMs() - jit0) / 1000.0,
-          codeCacheMb(), sysLoad(), cgClasses() - cg0))
-      }
-    }
+    // A query that throws (an OOM included) records -1, never kills the run.
+    def timedRun(fn: (SparkSession, String) => DataFrame): Option[Rep] =
+      try Some(clock.timed(fn(spark, sfDir).write.format("noop").mode("overwrite").save()))
+      catch { case _: Throwable => None }
 
     // Load gate (round-12 verdict item 1): the r12 driver record's q08/q09
     // weak flags were pure early-run box contention — every timed rep of
@@ -221,6 +103,7 @@ object Bench {
     // EliminateSorts strip the projections and trailing sort, flattering
     // expression-heavy queries). A query that throws records -1.0.
     val qseq = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.isEmpty || only(name) }
     val results0 = qseq.map { case (name, fn) =>
       def timed(): Option[Rep] = {
         val r = timedRun(fn)
@@ -309,7 +192,7 @@ object Bench {
       case c => c.toString
     }
     val envStamp =
-      s""""gc":"${jesc(gcNames)}","heap_mb":$heapMb,"method_split":${Bench.methodSplit},""" +
+      s""""gc":"${jesc(gcNames)}","heap_mb":$heapMb,""" +
         s""""jvm_flags":"${jesc(jvmFlags)}""""
     // Locale.ROOT: the f-interpolator formats through the DEFAULT locale,
     // which renders "12,34" on comma-decimal locales — invalid JSON
@@ -340,9 +223,10 @@ object Bench {
     // files to /tmp so a quick check can't overwrite the committed
     // multi-rep record in the working tree (this session's r12 lesson:
     // a REPS=1 run silently replaced the run6 record and got committed).
-    val outDir = if (reps >= 2) "" else "/tmp/"
+    // A query-filtered run is an A/B, not a record, for the same reason.
+    val outDir = if (reps >= 2 && only.isEmpty) "" else "/tmp/"
     if (outDir.nonEmpty)
-      System.err.println(s"[bench] REPS=$reps is a shape check, not a record: " +
+      System.err.println(s"[bench] REPS=$reps over ${qseq.size} queries is not a record: " +
         s"BENCH_LINE.json/BENCH_FULL.json written to $outDir (working-tree " +
         "records untouched)")
     java.nio.file.Files.writeString(

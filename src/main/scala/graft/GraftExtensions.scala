@@ -12,8 +12,9 @@ import graft.functions._
   *
   * The class is listed in
   * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
-  * so Spark's `ServiceLoader` applies it to every session that
-  * `SparkSession.builder().getOrCreate()` builds: SQL, `expr(...)` and
+  * so Spark's `ServiceLoader` applies it to every session the builder's
+  * `getOrCreate()` makes (the perfbench harness's, [[GraftSession.local]]'s
+  * and so every spec's): SQL, `expr(...)` and
   * `selectExpr` resolve all rows with no per-session call.
   * `--conf spark.sql.extensions=graft.GraftExtensions` names the same
   * class and injects the same table. */

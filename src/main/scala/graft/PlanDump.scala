@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round tooling (round 14): dumps `.explain("formatted")`
   * for registered queries to text files (the `plans/rNN/<q>_<tag>.txt`
   * deliverable), and optionally times the planning phases the Bench
@@ -24,17 +22,7 @@ object PlanDump {
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.sql.codegen.methodSplitThreshold", Bench.methodSplit)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     Files.createDirectories(Paths.get(outDir))
     val phases = sys.env.contains("SPARK_GRAFT_PHASES")
     SparkEntry.queries.toSeq.sortBy(_._1)

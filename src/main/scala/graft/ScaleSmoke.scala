@@ -5,9 +5,10 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession.{Clock, Rep}
 
 /** 10× scale smoke for the dedup/ANN family (round-4 verdict item 8):
   * the ScaleSpec exchange pins prove the PLANS don't change shape with
@@ -51,11 +52,11 @@ import org.apache.spark.sql.functions._
   *   sbt 'runMain graft.ScaleSmoke <query>…'   # measure named queries,
   *                                             #   append fragments to parts file
   *   sbt 'runMain graft.ScaleSmoke --assemble' # parts file → BENCH_SCALE.json
-  *   sbt 'runMain graft.ScaleSmoke'            # all queries in ONE JVM
-  *                                             #   (legacy; bimodality-prone)
   * (env: SPARK_GRAFT_SF_DIR base dir, SPARK_GRAFT_SCALE_DIR output dir,
   * SPARK_GRAFT_SCALE_FACTOR replicas (default 10), SPARK_GRAFT_SCALE_REPS
-  * steady reps (default 3), SPARK_GRAFT_SCALE_PARTS fragment file) */
+  * steady reps (default 3), SPARK_GRAFT_SCALE_WARM discarded warm-up reps
+  * (default 1), SPARK_GRAFT_SCALE_PARTS fragment file, SPARK_GRAFT_CPUS
+  * (default 32), SPARK_GRAFT_ADVISORY_MB AQE advisory partition size) */
 /** `tools/bench_scale.sh` reads the target list from here so bash never
   * carries its own copy (assemble validates completeness anyway). */
 object PrintScaleTargets {
@@ -137,78 +138,49 @@ object ScaleSmoke {
 
   private val Stride = 1000000L
 
-  final case class Rep(wall: Double, taskSec: Double, cpuSec: Double)
-
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val parts = sys.env.getOrElse("SPARK_GRAFT_SCALE_PARTS", "/tmp/graft_scale_parts.jsonl")
     if (args.contains("--assemble")) { assemble(parts); return }
 
+    val run = args.filter(a => !a.startsWith("--")).toSeq
+    require(run.nonEmpty, "name the queries to measure (tools/bench_scale.sh " +
+      "runs each in its own JVM), or pass --assemble")
+    val unknown = run.filterNot(n =>
+      n == "q74_semdedup_scaledk" || n == "q122_dedup_funnel_scaledk" ||
+        n == "q167_margin_gated_scaledc" ||
+        SparkEntry.queries.contains(n))
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scaled = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale10")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle splits must scale with volume for the same reason the
-    // generated slice writes 64 files, not 8 (see generate()): at
-    // factor 100 a 32-partition shuffle hands each task 100× the
-    // per-task state of the design point. Raw split count is not
-    // enough, though — AQE's coalescing (parallelismFirst=true) merges
-    // post-shuffle partitions back to ~defaultParallelism based on
-    // SHUFFLE bytes, which under-counts operators whose state EXPANDS
-    // the data: the round-10 q52 100× smoke shuffled ~1.5 GB of
-    // compressed raw columns that AQE happily packed into 32
-    // partitions, whose doc-assembly aggregate then inflated into 16 M
-    // live group buffers (~18 GB) and GC-thrashed a 24 GiB heap into
-    // heartbeat death. ADVISORY_MB sizes AQE's target from the
-    // expanded-state budget instead (it also disables parallelismFirst,
-    // which otherwise ignores the advisory) — the same tuning a real
-    // cluster applies to any shuffle feeding a state-expanding
-    // operator. State-expanding aggregates in this suite that warrant
-    // it at ≥100×: q52's doc assembly (the case above) and q146's
-    // corpus-rewrite aggregate (per-doc sorted_multi_concat of every
-    // kept line — its ×3.1 per-row CPU at 100× IS the rebuild payload,
-    // and the same 8 MB advisory keeps its post-shuffle partitions
-    // sized to the expanded state; 100× record in BENCH_NOTES).
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    val advisoryMb = sys.env.get("SPARK_GRAFT_ADVISORY_MB")
-    // The sort-based fallback is ObjectHashAggregate's ONLY memory
-    // valve (the hash map is bounded by entry COUNT, not bytes).
-    // 1048576 — the sf0.1 tuning, where 10⁴ bounded groups/partition
-    // made any fallback pure loss — turns the valve off entirely; a
-    // ~1 KB/group payload (q52's rendered XML members) then rides the
-    // map straight past the heap at 100×. 262144 ≈ 256 MB/task at that
-    // payload: unreachable at the design point (≤ 5 × 10⁴
-    // groups/partition through 30×), engaged before death beyond it.
-    val aggFallback = sys.env.getOrElse("SPARK_GRAFT_AGG_FALLBACK", "262144")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", aggFallback)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-    advisoryMb.foreach { mb =>
-      builder
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", s"${mb}m")
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    // AQE's coalescing (parallelismFirst=true) merges post-shuffle
+    // partitions back to ~defaultParallelism based on SHUFFLE bytes,
+    // which under-counts operators whose state EXPANDS the data: the
+    // round-10 q52 100× smoke shuffled ~1.5 GB of compressed raw columns
+    // that AQE happily packed into 32 partitions, whose doc-assembly
+    // aggregate then inflated into 16 M live group buffers (~18 GB) and
+    // GC-thrashed a 24 GiB heap into heartbeat death. ADVISORY_MB sizes
+    // AQE's target from the expanded-state budget instead (it also
+    // disables parallelismFirst, which otherwise ignores the advisory) —
+    // the same tuning a real cluster applies to any shuffle feeding a
+    // state-expanding operator. State-expanding aggregates in this suite
+    // that warrant it at ≥100×: q52's doc assembly (the case above) and
+    // q146's corpus-rewrite aggregate (per-doc sorted_multi_concat of
+    // every kept line — its ×3.1 per-row CPU at 100× IS the rebuild
+    // payload, and the same 8 MB advisory keeps its post-shuffle
+    // partitions sized to the expanded state; 100× record in BENCH_NOTES).
+    val advisory = sys.env.get("SPARK_GRAFT_ADVISORY_MB").toSeq.flatMap { mb =>
+      Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> s"${mb}m",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false")
     }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Per-stage executor run/CPU accumulation (same listener as Bench):
-    // task-seconds are contention-invariant up to scheduler noise, so a
+    val spark = GraftSession.local(cpus, advisory: _*)
+    // Task-seconds are contention-invariant up to scheduler noise, so a
     // rep whose wall spikes WITHOUT a task spike was a noisy host, and
     // one whose task spikes on identical stage structure is JVM state.
-    val runMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val cpuMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        runMs.addAndGet(m.executorRunTime)
-        cpuMs.addAndGet(m.executorCpuTime / 1000000L)
-      }
-    })
+    val clock = new Clock(spark)
 
     // a marker records WHAT the cached slice was built from — silently
     // reusing a slice generated at a different factor or from a
@@ -273,25 +245,8 @@ object ScaleSmoke {
         case n => SparkEntry.queries(n)
       }
 
-    def timed(name: String, dir: String): Rep = {
-      // Same pre-timer cleanup as Bench.scala: without the unpersist,
-      // every localCheckpoint a previous rep materialized stays pinned
-      // until the ContextCleaner's asynchronous removal runs INSIDE the
-      // next timed window — the r12 q120 signature (reps growing
-      // monotonically with zero gc / zero new codegen) reappeared here
-      // the moment q165/q167 gained checkpoints (r13: q167 x10 reps
-      // 1.44→11.97 s before this fix).
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      runMs.set(0L); cpuMs.set(0L)
-      val t0 = System.nanoTime()
-      queryFn(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // listener-bus settle before counter snapshot
-      Rep(wall, runMs.get / 1000.0, cpuMs.get / 1000.0)
-    }
+    def timed(name: String, dir: String): Rep =
+      clock.timed(queryFn(name)(spark, dir).write.format("noop").mode("overwrite").save())
 
     def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     def f2(v: Double): String =
@@ -304,14 +259,6 @@ object ScaleSmoke {
     // 1–5 overstated the steady cost it exists to record. WARM=2 puts
     // the median past the C2 ramp; task-seconds stay the cross-check.
     val warms = sys.env.getOrElse("SPARK_GRAFT_SCALE_WARM", "1").toInt.max(1)
-    val named = args.filter(a => !a.startsWith("--"))
-    val run = if (named.nonEmpty) named.toSeq else targets
-    val unknown = run.filterNot(n =>
-      n == "q74_semdedup_scaledk" || n == "q122_dedup_funnel_scaledk" ||
-        n == "q167_margin_gated_scaledc" ||
-        SparkEntry.queries.contains(n))
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-
     val fragments = run.map { name =>
       val bw = (1 to warms).map(_ => timed(name, base)).head
       val b = Seq.fill(reps)(timed(name, base))
@@ -330,15 +277,11 @@ object ScaleSmoke {
         s""""ratio":${f2(ratio)},"task_ratio":${f2(taskRatio)}}""")
     }
 
-    if (named.nonEmpty) {
-      // per-query isolation mode: append fragments for later --assemble
-      Files.write(Paths.get(parts),
-        (fragments.map(_._2).mkString("", "\n", "\n")).getBytes(StandardCharsets.UTF_8),
-        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-      println(s"[scale] appended ${fragments.size} fragment(s) to $parts")
-    } else {
-      writeRecord(factor, base, scaled, fragments.map(_._2))
-    }
+    // append fragments for a later --assemble
+    Files.write(Paths.get(parts),
+      (fragments.map(_._2).mkString("", "\n", "\n")).getBytes(StandardCharsets.UTF_8),
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    println(s"[scale] appended ${fragments.size} fragment(s) to $parts")
     spark.stop()
   }
 

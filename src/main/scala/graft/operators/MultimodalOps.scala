@@ -448,8 +448,6 @@ object MultimodalOps {
     * format (mp3/flac/opus) swaps its decoder in behind this same
     * surface without touching the Spark plumbing. */
   trait AudioAdapter extends Serializable {
-    /** (mimetype, channels, sampleRate, bitsPerSample, nSamplesPerChannel) */
-    def probe(path: String, content: Array[Byte]): (String, Int, Int, Int, Long)
     /** Channel-averaged samples normalized to [−1, 1]. */
     def samples(path: String, content: Array[Byte]): Array[Double]
   }
@@ -488,11 +486,6 @@ object MultimodalOps {
       val (doff, dlen) = data.getOrElse(
         throw new IllegalArgumentException(s"$path: no data chunk"))
       (ch, rate, bits, doff, math.min(dlen, b.length - doff))
-    }
-
-    def probe(path: String, content: Array[Byte]): (String, Int, Int, Int, Long) = {
-      val (ch, rate, bits, _, dlen) = header(path, content)
-      ("audio/wav", ch, rate, bits, dlen.toLong / (2L * ch))
     }
 
     def samples(path: String, content: Array[Byte]): Array[Double] = {
@@ -794,39 +787,6 @@ object MultimodalOps {
     }
   }
 
-  /** REAL assembler via `javax.imageio`'s TIFF plugin (in the JDK):
-    * decodes each page and writes one MULTI-PAGE TIFF with
-    * `writeToSequence` — an actual byte-level document assembly, the
-    * in-JDK analog of the reference's page-concat deliverable. An
-    * undecodable page THROWS: silently skipping would leave the
-    * caller's `n_pages` (the A9 deliverable contract) disagreeing with
-    * the container's image count (reviewed round 3) — filter or probe
-    * upstream if mixed batches are expected. */
-  object TiffSequenceAssembler extends PageAssembler {
-    def mimetype = "image/tiff"
-    def assemble(folder: String, pages: Seq[Array[Byte]]): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-      val writer = javax.imageio.ImageIO.getImageWritersByFormatName("tiff").next()
-      try {
-        writer.setOutput(ios)
-        writer.prepareWriteSequence(null)
-        pages.zipWithIndex.foreach { case (bytes, i) =>
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-          if (img == null) throw new IllegalArgumentException(
-            s"TiffSequenceAssembler: page $i of folder $folder is not a " +
-              "decodable image — n_pages must match the written container")
-          writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-        }
-        writer.endWriteSequence()
-      } finally {
-        writer.dispose()
-        ios.close()
-      }
-      bos.toByteArray
-    }
-  }
-
   /** REAL single-document PDF assembler — the in-JVM analog of the
     * reference's `pdftk cat` deliverable (`bin/dirtopdf.sh:117-123`),
     * closing the last stub container (round-6 verdict item 10). Each
@@ -835,8 +795,10 @@ object MultimodalOps {
     * own page sized to the image; the writer emits a complete PDF 1.4
     * body — catalog, page tree, per-page content streams, xref table,
     * trailer — with byte-exact offsets, so the output opens in any
-    * conforming reader. Undecodable pages THROW for the same n_pages
-    * contract reason as [[TiffSequenceAssembler]]. */
+    * conforming reader. An undecodable page THROWS: silently skipping
+    * would leave the caller's `n_pages` (the A9 deliverable contract)
+    * disagreeing with the container's page count — filter or probe
+    * upstream if mixed batches are expected. */
   object PdfAssembler extends PageAssembler {
     def mimetype = "application/pdf"
 

@@ -30,25 +30,17 @@ object StreamOps {
     * analog of the mtime-incremental scan (`bin/batch.sh:24-27`): the
     * source tracks processed files exactly-once in the checkpoint.
     *
-    * `readStream` needs a declared schema, but `events.ts` has shipped in
-    * multiple physical vintages (int64 nanos, TIMESTAMP_NTZ µs — see
-    * Tables.normalizeTs). Probe the footer of the files present with one
-    * driver-side batch-schema read (metadata only, no data scan), declare
-    * that schema, and normalize exactly like the batch loader so stream
-    * and batch plans stay expression-identical. */
+    * `events.ts` has shipped in multiple physical vintages (int64 nanos,
+    * TIMESTAMP_NTZ µs — see Tables.normalizeTs): [[documentsStream]]
+    * declares the schema probed from the files present, and the result
+    * is normalized exactly like the batch loader so stream and batch
+    * plans stay expression-identical. */
   def eventsStream(spark: SparkSession, dir: String,
       glob: String = "events*.parquet",
       maxFilesPerTrigger: Int = 0): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val probed = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
-    val reader = spark.readStream
-      .schema(probed)
-      .option("pathGlobFilter", glob)
-    val bounded = // > 0: cap files per micro-batch (multi-batch testing)
-      if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-      else reader
-    graft.sources.Tables.normalizeTs(bounded.parquet(dir))
+    graft.sources.Tables.normalizeTs(
+      documentsStream(spark, dir, glob, maxFilesPerTrigger))
   }
 
   /** Stream-stream interval self-join: each error event joins the same
@@ -138,11 +130,13 @@ object StreamOps {
       .toDF()
   }
 
-  /** File-source stream over a documents parquet directory — the ingest
-    * side of the corpus operators (the quality classifier runs over it
-    * unchanged, `StreamingSpec`): schema probed from the files present, exactly-once file tracking in the
-    * checkpoint, optional per-micro-batch file cap for multi-batch
-    * testing. */
+  /** File-source stream over a parquet directory — the ingest side of
+    * the corpus operators (the quality classifier runs over it
+    * unchanged, `StreamingSpec`) and the body of [[eventsStream]].
+    * `readStream` needs a declared schema: one driver-side batch-schema
+    * read probes the footers of the files present (metadata only, no
+    * data scan). Exactly-once file tracking in the checkpoint; optional
+    * per-micro-batch file cap (> 0) for multi-batch testing. */
   def documentsStream(spark: SparkSession, dir: String,
       glob: String = "*.parquet",
       maxFilesPerTrigger: Int = 0): DataFrame = {

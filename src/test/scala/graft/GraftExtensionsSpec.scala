@@ -1,10 +1,10 @@
 package graft
 
 /** The native-function catalog: [[GraftExtensions]] is listed as a
-  * `SparkSessionExtensionsProvider` service, so a session from a plain
-  * `SparkSession.builder().getOrCreate()` (the shared [[SparkSpec]] one)
-  * resolves every row of [[GraftExtensions.functions]] with no
-  * per-session call. `--conf spark.sql.extensions=graft.GraftExtensions`
+  * `SparkSessionExtensionsProvider` service, so a session from the
+  * builder's `getOrCreate()` (the shared [[SparkSpec]] one, from
+  * [[GraftSession.local]]) resolves every row of
+  * [[GraftExtensions.functions]] with no per-session call. `--conf spark.sql.extensions=graft.GraftExtensions`
   * names the same class. */
 class GraftExtensionsSpec extends SparkSpec {
 

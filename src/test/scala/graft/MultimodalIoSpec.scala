@@ -80,27 +80,6 @@ class MultimodalIoSpec extends SparkSpec {
     assert(docs("f2").n_pages === 1)
   }
 
-  test("TIFF assembler produces a genuine multi-page TIFF in page order") {
-    val pages = Seq(
-      ("f1", 1L, imageBytes("png", 40, 30)),
-      ("f1", 2L, imageBytes("tiff", 60, 20)),
-      ("f1", 3L, imageBytes("png", 10, 50)))
-      .toDF("folder", "pos", "content")
-    val doc = MultimodalOps.assemblePages(pages,
-      MultimodalOps.TiffSequenceAssembler).collect().head
-    assert(doc.mimetype === "image/tiff")
-    assert(doc.n_pages === 3)
-    val iis = ImageIO.createImageInputStream(
-      new java.io.ByteArrayInputStream(doc.content))
-    val reader = ImageIO.getImageReaders(iis).next()
-    reader.setInput(iis)
-    assert(reader.getNumImages(true) === 3)
-    assert((reader.getWidth(0), reader.getHeight(0)) === ((40, 30)))
-    assert((reader.getWidth(1), reader.getHeight(1)) === ((60, 20)))
-    assert((reader.getWidth(2), reader.getHeight(2)) === ((10, 50)))
-    reader.dispose()
-  }
-
   test("PDF assembler writes a structurally valid PDF with one page per image") {
     val pages = Seq(
       ("f1", 1L, imageBytes("png", 40, 30)),
@@ -139,18 +118,6 @@ class MultimodalIoSpec extends SparkSpec {
       .toDF("folder", "pos", "content")
     val e = intercept[org.apache.spark.SparkException] {
       MultimodalOps.assemblePages(pages, MultimodalOps.PdfAssembler).collect()
-    }
-    assert(e.getMessage != null)
-  }
-
-  test("TIFF assembler throws on an undecodable page instead of silently skipping") {
-    // silent skip would leave n_pages disagreeing with the container
-    val pages = Seq(
-      ("f1", 1L, imageBytes("png", 10, 10)),
-      ("f1", 2L, "definitely not an image".getBytes("UTF-8")))
-      .toDF("folder", "pos", "content")
-    val e = intercept[org.apache.spark.SparkException] {
-      MultimodalOps.assemblePages(pages, MultimodalOps.TiffSequenceAssembler).collect()
     }
     assert(e.getMessage != null)
   }
@@ -411,12 +378,12 @@ class MultimodalIoSpec extends SparkSpec {
 
   test("WavAudioAdapter rejects non-PCM and truncated payloads instead of misparsing") {
     intercept[IllegalArgumentException] {
-      MultimodalOps.WavAudioAdapter.probe("x.bin", Array.fill(10)(0.toByte))
+      MultimodalOps.WavAudioAdapter.samples("x.bin", Array.fill(10)(0.toByte))
     }
     val bad = wavBytes(Array(Array[Short](1, 2, 3, 4)), 8000)
     bad(20) = 3 // audioFormat: PCM=1 -> 3 (IEEE float would be misdecoded)
     intercept[IllegalArgumentException] {
-      MultimodalOps.WavAudioAdapter.probe("f.wav", bad)
+      MultimodalOps.WavAudioAdapter.samples("f.wav", bad)
     }
   }
 

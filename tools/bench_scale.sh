@@ -6,7 +6,12 @@
 # numbers, so the committed record now uses the same isolation).
 #
 # Usage: tools/bench_scale.sh [query ...]   # default: all ScaleSmoke targets
-# Env:   SPARK_GRAFT_SCALE_REPS (default 3), SPARK_GRAFT_CPUS (default 32)
+# Env read by this script: SPARK_GRAFT_SCALE_PARTS (fragment file,
+#   default /tmp/graft_scale_parts.jsonl), SPARK_DRIVER_MEM (heap, default 24g).
+# Env read by ScaleSmoke: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_SCALE_DIR,
+#   SPARK_GRAFT_SCALE_FACTOR (default 10), SPARK_GRAFT_SCALE_REPS (default 3),
+#   SPARK_GRAFT_SCALE_WARM (default 1), SPARK_GRAFT_CPUS (default 32),
+#   SPARK_GRAFT_ADVISORY_MB (AQE advisory partition size; unset = Spark's).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
