@@ -36,9 +36,9 @@ import org.apache.spark.sql.functions._
   * sorted-listing discipline explicit). Output is compact XML — the
   * XSL's `indent="yes"` whitespace is insignificant.
   *
-  * Scale shape: two partial-agg shuffles on bounded keys
-  * ((objid, abs_name), then objid); each folder's document builds inside
-  * one row from sorted arrays — no window, no per-member join, and
+  * Scale shape: one range exchange on `objid`, then one `mets_fold`
+  * aggregate per folder; each folder's document builds inside one row
+  * from one in-memory sort — no window, no per-member join, and
   * folders are bounded (a folder holds pages of one archival object).
   *
   * Input columns: objid, docid, created, title, abs_name, wholepart,
@@ -93,31 +93,43 @@ object MetsOps {
       """</mets:mdWrap></mets:rightsMD></mets:amdSec>"""
 
   /** One row per (objid, docid, created, title) with the rendered METS
-    * document in `mets_xml`.
+    * document in `mets_xml`: [[renderClustered]] behind ONE RANGE
+    * exchange on `objid`.
     *
-    * Shuffle shape (round-2 verdict item 1, tightened round 4): ONE
-    * RANGE exchange on `objid`, placed before any rendering. Range
+    * Shuffle shape (round-2 verdict item 1, tightened round 4): range
     * partitioning on a subset of the grouping/partition keys satisfies
-    * the clustered distribution of BOTH grouping levels and the ORDER
-    * window (all rows of a folder land in one partition), so neither
-    * aggregate nor the window adds an exchange — and, unlike the round-3
-    * hash exchange, it ALSO satisfies the caller's trailing total order
-    * by `objid` (OrderedDistribution), which removes both the final
-    * range exchange and its sampling pass. That sampling pass was
-    * q52's dominant hidden cost (profiles/q52_r4_baseline.jsonl): to
-    * sample sort keys, Spark re-executed the whole render + two
-    * aggregation levels a second time — ~45% of steady-state work.
-    * Sampling the RAW rows here instead costs one extra cheap scan.
-    * The wire still carries ~150 B/row of fields instead of ~700 B/row
-    * of rendered XML, once. */
-  def renderMets(reps: DataFrame): DataFrame = {
-    val parted = reps.repartitionByRange(col("objid"))
-    // per-row codegen'd rendering AFTER the exchange; the grouped levels
-    // below only sort, extract, and join pre-built strings. abs_name is
+    * the clustered distribution of the fold's grouping (all rows of a
+    * folder land in one partition), so the aggregate adds no exchange —
+    * and, unlike the round-3 hash exchange, it ALSO satisfies the
+    * caller's trailing total order by `objid` (OrderedDistribution),
+    * which removes both the final range exchange and its sampling pass.
+    * That sampling pass was q52's dominant hidden cost
+    * (profiles/q52_r4_baseline.jsonl): to sample sort keys, Spark
+    * re-executed the whole render + aggregation a second time — ~45% of
+    * steady-state work.
+    *
+    * The exchange carries whatever `reps` carries, and the range
+    * sampler re-runs every projection `reps` was built with. For 15
+    * derived string columns that is the md5 hex, the path concats and
+    * the literals, computed twice and shuffled as strings. A caller
+    * that derives its reps from a few raw fields should range-partition
+    * those raw fields itself and call [[renderClustered]] on the reps
+    * it builds after the exchange (q52 does). */
+  def renderMets(reps: DataFrame): DataFrame =
+    renderClustered(reps.repartitionByRange(col("objid")))
+
+  /** [[renderMets]] without its exchange: per-row rendering and the
+    * `mets_fold` aggregate over `reps` as partitioned. On reps already
+    * range- (or hash-) partitioned by `objid` it plans no exchange; on
+    * any other partitioning Spark inserts the one the aggregate needs,
+    * and the output is the same document byte for byte. */
+  def renderClustered(reps: DataFrame): DataFrame = {
+    // per-row codegen'd rendering; the grouped levels below only sort,
+    // extract, and join pre-built strings. abs_name is
     // attribute-escaped here too (once per row, codegen'd) — sorting
     // still keys on the RAW abs_name so group order matches dao.py's
     // sorted-key iteration even when names contain markup characters.
-    val rendered = parted
+    val rendered = reps
       .withColumn("can_esc", expr(xmlEsc("cannonical")))
       .withColumn("urn_esc", expr(xmlEsc("urn")))
       .withColumn("abs_esc", expr(xmlEsc("abs_name")))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
@@ -94,7 +95,7 @@ object DocQueries {
 
     // Full-fidelity METS (S15, lib/folder2mets.xsl:13-106) driver-checked
     // end-to-end: orders become whole (folder-level pdf) representations,
-    // lineitems become part (page) representations; MetsOps.renderMets
+    // lineitems become part (page) representations; MetsOps.renderClustered
     // assembles rights/tech amdSecs, whole-before-part fileSec, and the
     // ORDER-labelled structMap. The oracle replays the identical
     // two-level string_agg assembly in DuckDB.
@@ -189,45 +190,64 @@ object DocQueries {
         |  || member_divs || '</mets:div></mets:structMap></mets:mets>' AS mets_xml
         |FROM g2 ORDER BY objid""",
       "SURVEY §2.1 S15 full fidelity: whole-before-part METS with ORDER labels") { (s, d) =>
-      val o = Tables(s, d, "orders")
-      val okey = concat(lit("O"), col("o_orderkey"))
-      val whole = o.select(
-        okey.as("objid"),
-        okey.as("abs_name"),
-        concat(okey, lit(".pdf")).as("cannonical"),
-        lit("whole").as("wholepart"),
-        lit("deliverable").as("use"),
-        md5(concat(lit("ck"), col("o_orderkey")).cast("binary")).as("checksum"),
-        lit("MD5").as("checksumtype"),
-        floor(col("o_totalprice")).cast("long").cast("string").as("size"),
-        lit("application/pdf").as("mimetype"),
-        lit(null).cast("string").as("width"),
-        lit(null).cast("string").as("height"))
-      val l = Tables(s, d, "lineitem")
-      val lkey = concat(lit("O"), col("l_orderkey"))
-      val absName = concat(lkey, lit("/"),
-        lpad(col("l_linenumber").cast("string"), 8, "0"),
-        lit("_"), col("l_partkey"), lit("_"), col("l_suppkey"))
-      val part = l.select(
-        lkey.as("objid"),
+      // Only raw fields cross the one exchange: objid (the range key), a
+      // literal whole/part flag per branch and the numbers the rep
+      // strings derive from. The 15 rep columns — md5 hex, paths,
+      // literals — are built AFTER it, so the range sampler re-runs only
+      // a scan + one concat, and the exchange carries 8 columns instead
+      // of 14 string columns: 1.5 MB instead of 5.9 MB per pass of the
+      // perfbench query workload.
+      // The partition count is pinned at 2 × shuffle partitions. Measured
+      // at local[4] on that workload, interleaved runs: unpinned, AQE
+      // coalesces the now-small shuffle into ONE reduce task and q52's
+      // wall is 0.65-0.73 s against 0.41-0.44 s at 2×; pinned at 1×,
+      // heap_peak_mb reads 110-123 MB against 93-96 MB at 2× (90-92
+      // unpinned), past the benchmark's 24% heap bound. The likely cause
+      // (not traced): four quarter-table mets_fold buffers outlive the
+      // young collections that the post-exchange string building
+      // triggers and are promoted.
+      val whole = Tables(s, d, "orders").select(
+        concat(lit("O"), col("o_orderkey")).as("objid"),
+        lit(true).as("is_whole"),
+        col("o_orderkey").as("okey"),
+        col("o_totalprice").as("price"))
+      val part = Tables(s, d, "lineitem").select(
+        concat(lit("O"), col("l_orderkey")).as("objid"),
+        lit(false).as("is_whole"),
+        col("l_orderkey").as("okey"),
+        col("l_extendedprice").as("price"),
+        col("l_linenumber").as("lnum"),
+        col("l_partkey").as("pkey"),
+        col("l_suppkey").as("skey"),
+        col("l_quantity").as("qty"))
+      val nParts = 2 * s.sessionState.conf.numShufflePartitions
+      val raw = whole.unionByName(part, allowMissingColumns = true)
+        .repartitionByRange(nParts, col("objid"))
+      def wp(w: Column, p: Column): Column = when(col("is_whole"), w).otherwise(p)
+      val absName = wp(col("objid"), concat(col("objid"), lit("/"),
+        lpad(col("lnum").cast("string"), 8, "0"),
+        lit("_"), col("pkey"), lit("_"), col("skey")))
+      val reps = raw.select(
+        col("objid"),
         absName.as("abs_name"),
-        concat(absName, lit(".tif")).as("cannonical"),
-        lit("part").as("wholepart"),
-        lit("master").as("use"),
-        md5(concat_ws(":", lit("ck"), col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_suppkey")).cast("binary")).as("checksum"),
+        concat(absName, wp(lit(".pdf"), lit(".tif"))).as("cannonical"),
+        wp(lit("whole"), lit("part")).as("wholepart"),
+        wp(lit("deliverable"), lit("master")).as("use"),
+        wp(md5(concat(lit("ck"), col("okey")).cast("binary")),
+          md5(concat_ws(":", lit("ck"), col("okey"), col("lnum"),
+            col("pkey"), col("skey")).cast("binary"))).as("checksum"),
         lit("MD5").as("checksumtype"),
-        floor(col("l_extendedprice") * 100).cast("long").cast("string").as("size"),
-        lit("image/tiff").as("mimetype"),
-        floor(col("l_quantity")).cast("long").cast("string").as("width"),
-        col("l_partkey").cast("string").as("height"))
-      val reps = whole.unionByName(part)
+        wp(floor(col("price")), floor(col("price") * 100))
+          .cast("long").cast("string").as("size"),
+        wp(lit("application/pdf"), lit("image/tiff")).as("mimetype"),
+        wp(lit(null), floor(col("qty")).cast("long").cast("string")).as("width"),
+        wp(lit(null), col("pkey").cast("string")).as("height"))
         .withColumn("docid", concat(col("objid"), lit(".mets")))
         .withColumn("created", lit("2026-01-01T00:00:00Z"))
         .withColumn("title", concat(lit("Order "), col("objid")))
         .withColumn("urn",
           concat(lit("urn:pudl:images:"), col("use"), lit(":"), col("cannonical")))
-      MetsOps.renderMets(reps)
+      MetsOps.renderClustered(reps)
         .select("objid", "mets_xml")
         .orderBy("objid")
     })

@@ -94,6 +94,24 @@ class MetsOpsSpec extends SparkSpec {
       .parse(new java.io.ByteArrayInputStream(wrapped.getBytes("UTF-8")))
   }
 
+  test("renderClustered: renderMets's document on any input, no exchange of its own on objid-ranged reps") {
+    import org.apache.spark.sql.functions.col
+    // unpartitioned input: the fold's clustered distribution makes Spark
+    // insert an exchange itself, and the document is the same
+    def xml(df: org.apache.spark.sql.DataFrame) =
+      df.select("mets_xml").head.getString(0)
+    def exchanges(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString.linesIterator.count(_.contains("Exchange"))
+    val unparted = MetsOps.renderClustered(fixture())
+    assert(exchanges(unparted) === 1)
+    assert(xml(unparted) === xml(MetsOps.renderMets(fixture())))
+    // objid-ranged input: the one exchange is the caller's
+    val ranged = MetsOps.renderClustered(fixture().repartitionByRange(col("objid")))
+    assert(exchanges(ranged) === 1,
+      s"renderClustered added an exchange to objid-ranged reps:\n${ranged.queryExecution.executedPlan}")
+    assert(xml(ranged) === golden)
+  }
+
   test("missing title renders as [No title] (folder2mets.xsl:97)") {
     val noTitle = fixture().withColumn("title",
       org.apache.spark.sql.functions.lit(""))

@@ -282,7 +282,8 @@ class ScaleSpec extends SparkSpec {
     // critically, no range-sampling pass that re-executes the rendering
     // pipeline (profiles/q52_r4_baseline.jsonl measured that hidden
     // second execution at ~45% of steady-state work). One exchange,
-    // carrying fields — never rendered XML.
+    // carrying raw fields — never rendered XML, and for q52 none of the
+    // derived rep strings either (pinned below).
     val designed = Map(
       "q42_group_doc_nested" -> 1, // raw range repartition; sort is local
       "q43_mets_render" -> 1,      // raw range repartition; sort is local
@@ -305,6 +306,28 @@ class ScaleSpec extends SparkSpec {
       assert(codegenSpans >= 2,
         s"$name lost whole-stage codegen coverage ($codegenSpans spans)")
     }
+    // q52 ranges 8 raw fields (objid, a whole/part flag, the numeric
+    // keys and prices) and builds its 15 rep strings — md5 hex, paths,
+    // literals — after the exchange; with the strings built first the
+    // exchange carried 14 columns, all strings, and wrote 4× the bytes.
+    // Its partition count is pinned (REPARTITION_BY_NUM) so AQE cannot
+    // coalesce the now-small shuffle into one reduce task.
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.types.StringType
+    val q52 = SparkEntry.queries("q52_mets_full")(spark, sf("sf0.001"))
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+    val Seq(ex) = q52.collect { case e: ShuffleExchangeExec => e }
+    val in = ex.child.output
+    assert(in.size <= 8,
+      s"q52's exchange carries ${in.size} columns: ${in.map(_.name).mkString(", ")}")
+    assert(in.filter(_.dataType == StringType).map(_.name) === Seq("objid"),
+      s"q52's exchange carries string columns other than objid: $in")
+    assert(ex.shuffleOrigin === REPARTITION_BY_NUM,
+      s"q52's exchange is ${ex.shuffleOrigin}; AQE may coalesce it")
   }
 
   test("decontamination broadcasts the probe set; the corpus scan never shuffles") {
